@@ -1,5 +1,4 @@
-"""Shared one-per-invocation materialization barrier (optimization r13,
-fault-tolerance posture parameterised r14).
+"""Shared one-per-invocation materialization barrier.
 
 ``materialized(df)`` truncates lineage so that every downstream
 reference shares ONE physical build instead of re-executing the whole
@@ -16,69 +15,51 @@ Properties relied on throughout:
     is never involved, so nothing persists across bench/driver runs
     (no cross-run result caching);
   * explain renders the checkpointed subtree as ``Scan ExistingRDD`` —
-    plan-shape tests stub the per-module ``_materialized`` seams to
+    every call site goes through the module attribute
+    ``ckpt.materialized``, so plan-shape tests stub this one name to
     assert on the pre-checkpoint tree (tests/test_plans.py
     ``plan_of_unmaterialized``).
 
-Fault tolerance and storage lifetime (r13 VERDICT/ADVICE items):
+Where the barrier's partitions live is derived from the deployment,
+not configured here:
 
-  * The default ``local`` mode stores the barrier's partitions in
-    executor memory+disk with lineage TRUNCATED: on an executor loss
-    the downstream job cannot recompute the lost partitions and the
-    whole query invocation must be re-run from the source. That is the
-    guide-§5 trade ("when fault tolerance of that intermediate is not
-    critical"): the barrier removes 2-5 redundant corpus passes from
-    every run, while an executor loss costs one re-run of one query —
-    at 100 TB the expected cost of re-running the rare failed query is
-    far below the guaranteed cost of the redundant passes on every
-    query. It is NOT safe with dynamic allocation / spot executors;
-    for those deployments set the barrier mode to ``reliable``.
-  * ``reliable`` mode (``SPARK_GRAFT_BARRIER=reliable`` or spark conf
-    ``spark.graft.barrier``) uses a reliable ``checkpoint(eager=False)``
-    into the session's checkpoint directory (HDFS/object store on a
-    cluster): partitions survive executor loss; the extra cost is one
-    write+read of the barrier frame. A default local checkpoint dir is
-    installed if the session has none; set
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` so
-    checkpoint files are removed when the RDD is GC'd.
-  * ``none`` disables the barrier (debugging / plan inspection).
-  * Block lifetime: barrier blocks are freed by the driver's
-    ContextCleaner when the invocation's DataFrame is garbage
-    collected — a long-lived session running many queries releases
-    them incrementally; nothing accumulates across invocations beyond
-    normal GC lag.
+  * If the session's SparkContext has a checkpoint directory (set by
+    the deployment, e.g. an HDFS/object-store path on a cluster), the
+    barrier is a reliable ``checkpoint(eager=False)``: partitions
+    survive executor loss, at the cost of one write+read of the barrier
+    frame. Set ``spark.cleaner.referenceTracking.cleanCheckpoints=true``
+    so the files are removed when the RDD is garbage collected.
+  * Otherwise it is ``localCheckpoint(eager=False)`` — also the path
+    when there is no SparkContext (Spark Connect). Partitions live in
+    executor memory+disk with lineage TRUNCATED: an executor loss
+    cannot recompute them, and the whole query invocation must be
+    re-run from the source. That is the guide-§5 trade ("when fault
+    tolerance of that intermediate is not critical"): the barrier
+    removes 2-5 redundant corpus passes from every run, while an
+    executor loss costs one re-run of one query. It is NOT safe with
+    dynamic allocation / spot executors; such deployments set a
+    checkpoint directory.
+
+Block lifetime: barrier blocks are freed by the driver's ContextCleaner
+when the invocation's DataFrame is garbage collected — a long-lived
+session running many queries releases them incrementally; nothing
+accumulates across invocations beyond normal GC lag.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
-_VALID_MODES = ("local", "reliable", "none")
 
-
-def _barrier_mode(df: DataFrame) -> str:
+def _has_checkpoint_dir(df: DataFrame) -> bool:
     try:
-        mode = df.sparkSession.conf.get(
-            "spark.graft.barrier", os.environ.get("SPARK_GRAFT_BARRIER", "local")
-        )
-    except Exception:  # pragma: no cover — conf access race in shutdown
-        mode = "local"
-    return mode if mode in _VALID_MODES else "local"
+        sc = df.sparkSession.sparkContext
+    except Exception:  # Spark Connect: no SparkContext
+        return False
+    return not sc._jsc.sc().getCheckpointDir().isEmpty()
 
 
 def materialized(df: DataFrame) -> DataFrame:
-    mode = _barrier_mode(df)
-    if mode == "none":
-        return df
-    if mode == "reliable":
-        sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            sc.setCheckpointDir(
-                os.environ.get(
-                    "SPARK_GRAFT_CKPT_DIR", "/tmp/spark-graft-checkpoints"
-                )
-            )
+    if _has_checkpoint_dir(df):
         return df.checkpoint(eager=False)
     return df.localCheckpoint(eager=False)

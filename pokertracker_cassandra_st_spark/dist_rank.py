@@ -44,19 +44,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pokertracker_cassandra_st_spark import ckpt
+
 N_RANGE_BUCKETS = 32
-
-
-def _materialized(df: DataFrame) -> DataFrame:
-    """Lazy materialization barrier (optimization r13, guide §5) — see
-    the range_prefix comment. A module-level seam so plan-shape tests
-    can stub it to identity and assert on the full pre-checkpoint tree
-    (explain renders a checkpointed subtree as Scan ExistingRDD).
-    Delegates to ckpt.materialized (r14) so the fault-tolerance mode is
-    configured in one place (local / reliable / none — see ckpt.py)."""
-    from pokertracker_cassandra_st_spark.ckpt import materialized
-
-    return materialized(df)
 
 
 # fine-grid resolution for the equal-count mapping: first pass counts
@@ -107,17 +97,17 @@ def _with_bucket(df: DataFrame, primary: str, n_buckets: int) -> DataFrame:
     pre-aggregated statistic rows, never data."""
     fine = n_buckets * _FINE_MULT
     ext = df.agg(F.min(primary).alias("_mn"), F.max(primary).alias("_mx"))
+    # scaling runs in double: in the key's own type (x - min) * cells
+    # wraps for wide int/long keys and drops rows from every bucket;
+    # the cast is monotone, so b(x) stays monotone
+    x, mn, mx = (F.col(c).cast("double") for c in (primary, "_mn", "_mx"))
     cell = (
         F.when(F.col(primary).isNull(), F.lit(-1))
-        .when(F.col("_mx") == F.col("_mn"), F.lit(0))
+        .when(mx == mn, F.lit(0))
         .otherwise(
             F.least(
                 F.lit(fine - 1),
-                F.floor(
-                    (F.col(primary) - F.col("_mn"))
-                    * fine
-                    / (F.col("_mx") - F.col("_mn"))
-                ).cast("int"),
+                F.floor((x - mn) * fine / (mx - mn)).cast("int"),
             )
         )
     )
@@ -153,14 +143,13 @@ def _with_bucket(df: DataFrame, primary: str, n_buckets: int) -> DataFrame:
         F.coalesce(F.sum("_c").over(w_prev), F.lit(0)).alias("_cum"),
         F.sum("_c").over(w_tot).alias("_tot"),
     )
-    heavy = (F.col("_c") * n_buckets > F.col("_tot")) & (
-        F.col("_chi") > F.col("_clo")
-    )
+    clo, chi = F.col("_clo").cast("double"), F.col("_chi").cast("double")
+    heavy = (F.col("_c") * n_buckets > F.col("_tot")) & (chi > clo)
     bucket_of = (
         f"least({n_buckets - 1}, cast((_cum + _c * j div {_REFINE_SUB}) "
         f"* {n_buckets} div _tot as int))"
     )
-    cellmap = _materialized(
+    cellmap = ckpt.materialized(
         cum.select(
             "_fc",
             "_clo",
@@ -191,11 +180,7 @@ def _with_bucket(df: DataFrame, primary: str, n_buckets: int) -> DataFrame:
     ).otherwise(
         F.least(
             F.lit(_REFINE_SUB - 1),
-            F.floor(
-                (F.col(primary) - F.col("_clo"))
-                * _REFINE_SUB
-                / (F.col("_chi") - F.col("_clo"))
-            ).cast("int"),
+            F.floor((x - clo) * _REFINE_SUB / (chi - clo)).cast("int"),
         )
     )
     return (
@@ -254,7 +239,7 @@ def range_prefix(
         raise ValueError(
             f"output columns already exist on the frame: {clashes}"
         )
-    helpers = {"_b", "_fc"} | {
+    helpers = {"_b", "_fc", "_mn", "_mx", "_clo", "_chi", "_heavy", "_bmap"} | {
         f"_{d}_{suf}" for d in dsts for suf in ("loc", "off", "tot")
     }
     helper_clash = sorted(
@@ -274,7 +259,7 @@ def range_prefix(
     # metrics back-to-back) compounded that geometrically (measured
     # 8.8 s / a 425 KB plan at sf0.1; 1.1 s after). Values unchanged:
     # the checkpoint is per-invocation, nothing persists across runs.
-    df = _materialized(df)
+    df = ckpt.materialized(df)
     part = _with_bucket(df, order_cols[0], n_buckets)
     end = 0 if inclusive else -1
     w_local = (

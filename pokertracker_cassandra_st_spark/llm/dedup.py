@@ -17,8 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pokertracker_cassandra_st_spark import ckpt
 from pokertracker_cassandra_st_spark.catalog import table
-from pokertracker_cassandra_st_spark.ckpt import materialized as _materialized
 from pokertracker_cassandra_st_spark.registry import register
 
 AUG_OFFSET = 1_000_000
@@ -212,8 +212,8 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # optimization r13 (guide §5): sh feeds the set-size counts AND
     # both self-join sides (3 lineages = 3 corpus tokenize+shingle
     # passes before); counts feeds both per-pair attaches (2 more)
-    sh = _materialized(sh)
-    counts = _materialized(sh.groupBy("doc_id").agg(F.count("*").alias("n")))
+    sh = ckpt.materialized(sh)
+    counts = ckpt.materialized(sh.groupBy("doc_id").agg(F.count("*").alias("n")))
     a = sh.alias("a")
     b = sh.alias("b")
     common = (
@@ -301,8 +301,8 @@ def q_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # family in _minhash_triples — candidate structure unchanged (16
     # tables, same prime), output pinned by the exact-verify tier and
     # re-verified against the oracle at sf0.001/0.01/0.1.
-    sh = _materialized(sh)
-    buckets = _materialized(_minhash_triples(sh))
+    sh = ckpt.materialized(sh)
+    buckets = ckpt.materialized(_minhash_triples(sh))
     # merge, not shuffle_hash (round 13): the (t, h) composite key
     # builds an UnsafeHashedRelation whose per-partition footprint is
     # corpus-linear AND skew-prone (hot minhash values concentrate one
@@ -334,8 +334,8 @@ def q_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join on the pair key. Set sizes |A|, |B| attach by doc id;
     # jaccard arithmetic is unchanged, so the output is byte-identical
     # to the array form at every scale.
-    ex = _materialized(sh.select("doc_id", F.explode("shingles").alias("sh")))
-    counts = _materialized(ex.groupBy("doc_id").agg(F.count("*").alias("n")))
+    ex = ckpt.materialized(sh.select("doc_id", F.explode("shingles").alias("sh")))
+    counts = ckpt.materialized(ex.groupBy("doc_id").agg(F.count("*").alias("n")))
     # the shingle self-join is explicitly SORT-MERGE: the exploded
     # frame is corpus x shingles rows, far past any per-partition hash
     # build (a shuffle_hash hint here OOM'd the 48g harness at the
@@ -585,7 +585,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # optimization r13 (guide §5): ranked feeds both candidate-join
     # sides — un-checkpointed, each side re-ran the tokenize + 64-vote
     # aggregation + band explode (the dominant stages) from scratch
-    ranked = _materialized(
+    ranked = ckpt.materialized(
         bands.withColumn(
             "rn",
             F.row_number().over(
@@ -692,7 +692,7 @@ def _with_subcell(aug: DataFrame, keep_bits: bool = False) -> DataFrame:
     ]
     if clash:
         raise ValueError(f"input columns collide with subcell helpers: {clash}")
-    aug = _materialized(aug)
+    aug = ckpt.materialized(aug)
     signs = _cell_plane_signs()
     eq = F.transform(
         "emb", lambda x: F.floor(x * 1_000_000 + F.lit(0.5)).cast("long")
@@ -742,7 +742,7 @@ def _with_subcell(aug: DataFrame, keep_bits: bool = False) -> DataFrame:
         .withColumn("subcell", sel.cast("long"))
         .drop("ceq", *[f"_pj{p}" for p in range(MAX_CELL_BITS)])
     )
-    return _materialized(out if keep_bits else out.drop("cbits"))
+    return ckpt.materialized(out if keep_bits else out.drop("cbits"))
 
 
 def _cell_subcell_ctes() -> str:
@@ -972,7 +972,7 @@ def q_dedup_editdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact, so no row of the inner joins can be lost). The narrowed
     text frame is materialized because both attach sides consume it.
     """
-    pairs = _materialized(
+    pairs = ckpt.materialized(
         q_dedup_ngram_jaccard(spark, sf_dir).select("id_a", "id_b")
     )
     ids = (
@@ -980,7 +980,7 @@ def q_dedup_editdist(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
-    corpus = _materialized(
+    corpus = ckpt.materialized(
         augmented_corpus(spark, sf_dir).join(
             ids.hint("shuffle_hash"), "doc_id", "left_semi"
         )
@@ -1438,7 +1438,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # optimization r13 (guide §5): qt feeds the centroid explode AND
     # both pair-join sides; cosc feeds three attaches — each was a full
     # lineage re-run before
-    qt = _materialized(
+    qt = ckpt.materialized(
         aug.select("vec_id", "label", "subcell", qcol.alias("q"), "emb")
     )
     # optimization r14 (guide §2.3/§1.2 — VERDICT r13 item 5): the
@@ -1508,7 +1508,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos_c"),
         )
     )
-    cosc = _materialized(cosc)
+    cosc = ckpt.materialized(cosc)
 
     def dot(x, y):
         return F.aggregate(
@@ -1755,8 +1755,8 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # optimization r13 (guide §5): each side's shingle frame feeds the
     # LSH buckets, the leading-fingerprint tier AND the verify join
     # (3 lineages each = 3 tokenize+shingle passes per side before)
-    sh_c = _materialized(shingled(corpus))
-    sh_s = _materialized(shingled(shard))
+    sh_c = ckpt.materialized(shingled(corpus))
+    sh_s = ckpt.materialized(shingled(shard))
 
     # tier 3: asymmetric LSH — ONE seeded hash family (module-pinned
     # coefficients, _minhash_triples) signs both sides; the corpus side
@@ -1906,8 +1906,8 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # optimization r13 (guide §5): sh feeds the set-size counts AND
     # both self-join sides (3 lineages = 3 corpus tokenize+shingle
     # passes before); counts feeds both per-pair attaches (2 more)
-    sh = _materialized(sh)
-    counts = _materialized(sh.groupBy("doc_id").agg(F.count("*").alias("n")))
+    sh = ckpt.materialized(sh)
+    counts = ckpt.materialized(sh.groupBy("doc_id").agg(F.count("*").alias("n")))
     a = sh.alias("a")
     b = sh.alias("b")
     common = (
@@ -2226,8 +2226,8 @@ def q_dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # optimization r13 (guide §5): sh feeds the set-size counts AND
     # both self-join sides (3 lineages = 3 corpus tokenize+shingle
     # passes before); counts feeds both per-pair attaches (2 more)
-    sh = _materialized(sh)
-    counts = _materialized(sh.groupBy("doc_id").agg(F.count("*").alias("n")))
+    sh = ckpt.materialized(sh)
+    counts = ckpt.materialized(sh.groupBy("doc_id").agg(F.count("*").alias("n")))
     a = sh.alias("a")
     b = sh.alias("b")
     common = (

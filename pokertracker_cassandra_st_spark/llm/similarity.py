@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pokertracker_cassandra_st_spark import ckpt
 from pokertracker_cassandra_st_spark.catalog import table
 from pokertracker_cassandra_st_spark.registry import register
 
@@ -1784,9 +1785,7 @@ def q_sim_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # optimization r13 (guide §5): nrm feeds both pair-join sides —
     # each re-ran the quantize + norm pass (and, pre-checkpoint, the
     # whole subcell assignment) before
-    from pokertracker_cassandra_st_spark.ckpt import materialized
-
-    nrm = materialized(
+    nrm = ckpt.materialized(
         cells.select("vec_id", "label", "subcell", qcol.alias("q"))
         .withColumn("nsq", nsq)
         .filter(F.col("nsq") > 0)

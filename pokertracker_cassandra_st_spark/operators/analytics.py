@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pokertracker_cassandra_st_spark import ckpt
 from pokertracker_cassandra_st_spark.catalog import table, tables
 from pokertracker_cassandra_st_spark.exprs import slong
 from pokertracker_cassandra_st_spark.registry import register
@@ -372,9 +373,7 @@ def q_agg_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # optimization r13 (guide §5): items feeds both self-join sides,
     # the frequency agg and the order count — four lineages, each
     # re-running the fact scan + distinct before; materialized once
-    from pokertracker_cassandra_st_spark.ckpt import materialized
-
-    items = materialized(
+    items = ckpt.materialized(
         li.select(
             F.col("l_orderkey").alias("okey"), F.col("l_partkey").alias("pkey")
         ).distinct()

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pokertracker_cassandra_st_spark import ckpt
 from pokertracker_cassandra_st_spark.catalog import table
 from pokertracker_cassandra_st_spark.registry import register
 
@@ -35,32 +36,11 @@ _R0 = 1_000_000_000  # initial rank 1.0, scaled 1e9
 _BASE = 150_000_000  # (1 - 0.85) scaled
 
 
-def _materialized(df: DataFrame) -> DataFrame:
-    """One-per-invocation materialization barrier (optimization r13,
-    guide §5): a LAZY local checkpoint, so every downstream reference
-    shares ONE physical build of the subtree instead of re-executing
-    its whole lineage per reference — Catalyst has no common-subplan
-    reuse across DataFrame branches, and the graph family's edge/degree
-    frames were being rebuilt 3-5x inside single queries (measured
-    q_graph_triangle_count 74.9 s isolated at sf0.1 before, 3.6 s
-    after). ``eager=False`` keeps query *construction* and
-    explain/plan_of job-free (the r12 ADVICE localCheckpoint note); the
-    materialization happens inside the first action. Fresh per call —
-    the CacheManager is never involved, so nothing persists across
-    invocations (no cross-run result caching). Delegates to
-    ckpt.materialized (r14) so the barrier's fault-tolerance mode is
-    configured in ONE place (local / reliable / none — see ckpt.py);
-    kept as a module seam so plan tests can stub it."""
-    from pokertracker_cassandra_st_spark.ckpt import materialized
-
-    return materialized(df)
-
-
 def _trade_edges(
     spark: SparkSession, sf_dir: str, drop_null_cust: bool = False
 ) -> DataFrame:
     """Distinct customer->supplier trade edges, built ONCE per query
-    invocation and materialized (see _materialized): the bipartite
+    invocation and materialized (see ckpt.materialized): the bipartite
     graph every c/s-family query re-derived per reference before."""
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     if drop_null_cust:
@@ -71,7 +51,7 @@ def _trade_edges(
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
     )
-    return _materialized(edges)
+    return ckpt.materialized(edges)
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -97,7 +77,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p1", F.explode("ps").alias("p2"))
         .filter(F.col("p1") < F.col("p2"))
     )
-    return _materialized(pairs.select("p1", "p2").distinct())
+    return ckpt.materialized(pairs.select("p1", "p2").distinct())
 
 
 def _oriented_triangles(edges: DataFrame) -> DataFrame:
@@ -130,7 +110,7 @@ def _oriented_triangles(edges: DataFrame) -> DataFrame:
     fwd = (F.col("dg1") < F.col("dg2")) | (
         (F.col("dg1") == F.col("dg2")) & (F.col("p1") < F.col("p2"))
     )
-    o = _materialized(
+    o = ckpt.materialized(
         ed.select(
             F.when(fwd, F.col("p1")).otherwise(F.col("p2")).alias("u"),
             F.when(fwd, F.col("p2")).otherwise(F.col("p1")).alias("v"),
@@ -305,7 +285,7 @@ def q_graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     edges = _copurchase_edges(spark, sf_dir)
     tri = _oriented_triangles(edges)
-    per_node = _materialized(
+    per_node = ckpt.materialized(
         tri.select(
             F.explode(F.array("a", "b", "c")).alias("node")
         )
@@ -554,8 +534,8 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("s").alias("n_suppliers"),
         )
 
-    e1 = _materialized(peel(edges))
-    e2 = _materialized(peel(e1))
+    e1 = ckpt.materialized(peel(edges))
+    e2 = ckpt.materialized(peel(e1))
     return (
         summary(edges, 0)
         .unionAll(summary(e1, 1))
@@ -728,7 +708,7 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frontier 2-4x (probe + anti + layer count + unreached count), so
     # the un-checkpointed form re-ran the whole prefix per reference.
     edges = _trade_edges(spark, sf_dir, drop_null_cust=True)
-    seed = _materialized(
+    seed = ckpt.materialized(
         cust.filter(F.col("c_nationkey") == 0).select(
             F.col("c_custkey").alias("c")
         )
@@ -738,18 +718,18 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a wide frontier) nor a sort-merge (two sorts per hop for a
     # hash-sized build) is the cluster shape; shuffle-hash keys both
     # sides by the frontier's node id, one exchange per side per hop.
-    s1 = _materialized(
+    s1 = ckpt.materialized(
         edges.join(seed.hint("shuffle_hash"), "c", "left_semi")
         .select("s")
         .distinct()
     )
-    c2 = _materialized(
+    c2 = ckpt.materialized(
         edges.join(s1.hint("shuffle_hash"), "s", "left_semi")
         .select("c")
         .distinct()
         .join(seed.hint("shuffle_hash"), "c", "left_anti")
     )
-    s3 = _materialized(
+    s3 = ckpt.materialized(
         edges.join(c2.hint("shuffle_hash"), "c", "left_semi")
         .select("s")
         .distinct()
@@ -848,7 +828,7 @@ def q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-running the edge build + degree join per side.
     edges = _trade_edges(spark, sf_dir)
     cdeg = edges.groupBy("c").agg(F.count("*").alias("d"))
-    w = _materialized(
+    w = ckpt.materialized(
         edges.join(cdeg.hint("shuffle_hash"), "c")
         .filter(F.col("d") >= 2)
         .select(
@@ -1029,7 +1009,7 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     before); deg materialized too (du and dv read it twice).
     """
     e = _copurchase_edges(spark, sf_dir)
-    deg = _materialized(
+    deg = ckpt.materialized(
         e.select(F.col("p1").alias("node"))
         .unionAll(e.select(F.col("p2").alias("node")))
         .groupBy("node")

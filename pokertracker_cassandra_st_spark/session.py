@@ -47,6 +47,22 @@ _RUNTIME_CONF = {
 
 _PYFILE_SHIPPED: set[str] = set()
 
+# Driver heap in local mode: the driver JVM is the whole executor pool,
+# so it gets a fixed share of physical memory, leaving the rest to the
+# Python workers and the page cache.
+_HEAP_FRACTION = 0.4
+
+
+def _host_cpus() -> int:
+    """CPUs this process may use (its affinity mask, not the machine's
+    core count); ``SPARK_GRAFT_CPUS`` overrides it for a deployment."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def _driver_memory() -> str:
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, int(phys * _HEAP_FRACTION / 2**30))}g"
+
 
 def _ship_package(spark: SparkSession) -> None:
     """Make this package importable on executors regardless of the
@@ -96,8 +112,7 @@ def tune(spark: SparkSession) -> SparkSession:
         except Exception:  # conf locked down — keep going, not fatal
             pass
     try:
-        ncpu = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        spark.conf.set("spark.sql.shuffle.partitions", str(max(ncpu, 8)))
+        spark.conf.set("spark.sql.shuffle.partitions", str(max(_host_cpus(), 8)))
     except Exception:
         pass
     try:
@@ -117,20 +132,24 @@ def tune(spark: SparkSession) -> SparkSession:
 
 
 def get_spark(app_name: str = "pokertracker-spark") -> SparkSession:
-    """Build (or reuse) a local session sized from the environment.
+    """Build (or reuse) a local session sized from the host.
 
-    local[N] = one JVM, N executor threads; ``spark.driver.memory`` is
-    the only memory knob in local mode. On a real cluster the same app
-    would be submitted with executor settings instead — nothing in the
-    query code depends on local mode.
+    local[N] = one JVM, N executor threads, N = the CPUs this process
+    may use; ``spark.driver.memory`` is the only memory knob in local mode
+    (``SPARK_DRIVER_MEMORY`` overrides the physical-memory share). On a
+    real cluster the same app would be submitted with executor settings
+    instead — nothing in the query code depends on local mode.
     """
-    ncpu = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    ncpu = _host_cpus()
     builder = (
         SparkSession.builder.master(f"local[{ncpu}]")
         .appName(app_name)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", str(max(int(ncpu), 8)))
+        .config("spark.sql.shuffle.partitions", str(max(ncpu, 8)))
     )
     for k, v in _RUNTIME_CONF.items():
         builder = builder.config(k, v)

@@ -110,3 +110,40 @@ def test_skewed_range_buckets_balanced(spark):
     # bucket 0), and the mass spread over most of the key space
     assert max(counts.values()) <= 2 * ideal
     assert len(counts) >= 24
+
+
+def _assert_matches_global_row_number(df, n):
+    got = range_row_number(df, ["k", "id"], "rn")
+    ref = df.withColumn("rn_ref", F.row_number().over(Window.orderBy("k", "id")))
+    j = got.join(ref, ["k", "id"])
+    assert got.count() == n
+    assert j.count() == n
+    assert j.filter(F.col("rn") != F.col("rn_ref")).count() == 0
+
+
+def test_wide_int_key_keeps_every_row(spark):
+    # (k - min) * cells overflowed the int key's own type once the key
+    # spanned more than ~1M: rows fell out of every bucket and the
+    # surviving ranks were shifted
+    n = 200_000
+    df = spark.range(n).select("id", (F.col("id") * 15).cast("int").alias("k"))
+    _assert_matches_global_row_number(df, n)
+
+
+def test_long_key_spanning_both_signs_keeps_every_row(spark):
+    # k - min itself overflows a long when the key spans +-2^62
+    n = 20_000
+    step = 2**63 // n
+    df = spark.range(n).select(
+        "id", (F.col("id") * F.lit(step) - F.lit(2**62)).alias("k")
+    )
+    _assert_matches_global_row_number(df, n)
+
+
+@pytest.mark.parametrize("helper", ["_b", "_fc", "_mn", "_mx", "_clo", "_chi", "_heavy", "_bmap"])
+def test_helper_column_names_are_rejected(spark, helper):
+    df = _frame(spark, CASES["tiny"]).withColumn(helper, F.lit(0))
+    with pytest.raises(ValueError, match="collide with range_prefix helpers"):
+        range_row_number(df, ["x", "k"], "rn")
+    with pytest.raises(ValueError, match="collide with range_prefix helpers"):
+        range_row_number(_frame(spark, CASES["tiny"]), ["x", "k"], helper)

@@ -1,16 +1,16 @@
 """Focused locks for the round-14 optimization changes.
 
-Pins: (a) the barrier's parameterised fault-tolerance modes produce
-identical results and never touch the CacheManager, (b) the native
-seeded MinHash family fully replaced the spark.ml stage (no ScalaUDF /
-vector stage in the plan) with deterministic coefficients, (c) the
-dist_rank equal-count mapping stays monotone/deterministic under the
-modes (the skew-balance property itself is locked in test_dist_rank).
+Pins: (a) the reliable barrier (taken when the session has a checkpoint
+dir) produces identical results and never touches the CacheManager,
+(b) the native seeded MinHash family fully replaced the spark.ml stage
+(no ScalaUDF / vector stage in the plan) with deterministic
+coefficients, (c) the dist_rank equal-count mapping stays
+monotone/deterministic (the skew-balance property itself is locked in
+test_dist_rank).
 """
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from pokertracker_cassandra_st_spark.plans.inspect import explain_str
@@ -19,22 +19,27 @@ from pokertracker_cassandra_st_spark.registry import REGISTRY, get_queries
 get_queries()
 
 
-@pytest.mark.parametrize("mode", ["reliable", "none"])
-def test_barrier_modes_value_identical_and_cache_free(spark, sf_dir, mode, tmp_path):
-    # ckpt.materialized (r14): the fault-tolerance mode must change
-    # WHERE barrier partitions live, never what any query computes, and
-    # must never register anything with the CacheManager (plan-keyed
-    # entries would survive across runs = cross-run result caching)
+def test_barrier_reliable_with_checkpoint_dir_value_identical_and_cache_free(
+    spark, sf_dir, tmp_path
+):
+    # ckpt.materialized: a checkpoint dir on the session switches the
+    # barrier to a reliable checkpoint — that changes WHERE barrier
+    # partitions live, never what any query computes, and must never
+    # register anything with the CacheManager (plan-keyed entries would
+    # survive across runs = cross-run result caching)
     fn = REGISTRY["q_agg_rfm"].fn
     base = sorted(map(tuple, fn(spark, sf_dir).collect()))
     assert base
-    spark.conf.set("spark.graft.barrier", mode)
-    if mode == "reliable":
-        spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    sc = spark.sparkContext
+    assert sc._jsc.sc().getCheckpointDir().isEmpty()
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
     try:
         got = sorted(map(tuple, fn(spark, sf_dir).collect()))
+        assert any((tmp_path / "ckpt").rglob("part-*")), "no reliable checkpoint written"
     finally:
-        spark.conf.unset("spark.graft.barrier")
+        # the session is shared: later tests must see no checkpoint dir
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+    assert sc._jsc.sc().getCheckpointDir().isEmpty()
     assert got == base
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
@@ -45,9 +50,7 @@ def test_minhash_native_family_no_scala_udf(spark, sf_dir, monkeypatch):
     # contain the xxhash64 shingle hash and NO UDF invocation at all
     # (the ml transform surfaced as 28 ScalaUDF calls in the r13 plan)
     import pokertracker_cassandra_st_spark.ckpt as ckpt
-    import pokertracker_cassandra_st_spark.llm.dedup as dedup
 
-    monkeypatch.setattr(dedup, "_materialized", lambda df: df)
     monkeypatch.setattr(ckpt, "materialized", lambda df: df)
     plan = explain_str(REGISTRY["q_dedup_near_minhash"].fn(spark, sf_dir))
     assert "xxhash64" in plan

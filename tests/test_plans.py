@@ -30,13 +30,7 @@ def plan_of_unmaterialized(
     inspect the full pre-checkpoint tree — the plan that actually
     executes inside the checkpoint's own query execution."""
     import pokertracker_cassandra_st_spark.ckpt as ckpt
-    import pokertracker_cassandra_st_spark.dist_rank as dist_rank
-    import pokertracker_cassandra_st_spark.llm.dedup as dedup
-    import pokertracker_cassandra_st_spark.operators.graph as graph
 
-    monkeypatch.setattr(graph, "_materialized", lambda df: df)
-    monkeypatch.setattr(dist_rank, "_materialized", lambda df: df)
-    monkeypatch.setattr(dedup, "_materialized", lambda df: df)
     monkeypatch.setattr(ckpt, "materialized", lambda df: df)
     return plan_of(spark, name, sf_dir, mode=mode)
 
@@ -1570,9 +1564,11 @@ def test_nearest_join_is_bucket_banded(spark, sf_dir):
     # keys and EQUI-joins on the bucket — a hash-partitioned join,
     # never a nested loop evaluating supplier x customer (the raw
     # BETWEEN band form planned as BroadcastNestedLoopJoin; ADVICE
-    # r10); per-supplier argmin is WindowGroupLimit-pruned
+    # r10); per-supplier argmin is a partial min(struct) aggregate,
+    # not a window
     simple = plan_of(spark, "q_join_nearest", sf_dir, mode="simple")
-    assert "WindowGroupLimit" in simple
+    assert "partial_min(struct" in simple
+    assert "Window" not in simple
     assert "BroadcastNestedLoopJoin" not in simple
     assert "CartesianProduct" not in simple
     assert "ShuffledHashJoin" in simple or "SortMergeJoin" in simple

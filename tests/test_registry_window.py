@@ -1,10 +1,10 @@
 """Contract tests for the driver-facing registry ordering.
 
-The driver's correctness gate checks the first 50 registry entries;
-registry.WINDOW pins which queries those are. These tests lock the
-invariants that make the round-2 rotation plan work: the window is
-exactly the first 50, fully oracle-backed, and covers every operator
-family from SURVEY.md §2.1.
+The external correctness driver checks the first 50 registry entries;
+registry.WINDOW pins which queries those are. These tests lock that the
+window is exactly the first 50, fully oracle-backed, and covers every
+operator family from SURVEY.md §2.1, and that the latest full-registry
+artifact hash-pins every query.
 """
 
 from __future__ import annotations
@@ -51,139 +51,19 @@ def test_window_is_first_50_and_oracle_backed():
     assert not missing, f"window entries without an oracle: {missing}"
 
 
-def _driver_checked() -> set[str]:
-    """Union of every driver CORRECTNESS artifact written so far."""
-    import glob
-    import json
-
-    checked: set[str] = set()
-    for f in sorted(glob.glob("/root/repo/CORRECTNESS_r[0-9]*.json")):
-        checked |= set(json.load(open(f)))
-    return checked
-
-
 def test_window_covers_every_family():
-    """Every §2.1 family must carry a driver signal: either a prior
-    driver-green CORRECTNESS row or a slot in the active window.
-
-    (Through round 3 the window itself covered every family; from round
-    4 on, every slot goes to a never-driver-checked query until the
-    backlog clears — VERDICT r3 'Next round #1' — so families whose
-    entries are all already driver-green are covered cumulatively.)
-    """
-    covered = set(WINDOW) | _driver_checked()
+    """The 50 driver-checked slots alone cover every §2.1 family."""
     uncovered = [
         fam
         for fam, prefixes in FAMILY_PREFIXES.items()
-        if not any(n.startswith(p) for p in prefixes for n in covered)
+        if not any(n.startswith(p) for p in prefixes for n in WINDOW)
     ]
-    assert not uncovered, f"families with no driver signal at all: {uncovered}"
+    assert not uncovered, f"families with no slot in the window: {uncovered}"
 
 
 def test_every_query_registered_and_named():
     get_queries()
     assert all(n.startswith("q_") for n in REGISTRY)
-
-
-def test_round4_window_ran_as_planned():
-    """Historical pin: CORRECTNESS_r04.json must cover exactly the 50
-    WINDOW_R4 slots — the round-4 rotation executed as drafted."""
-    import json
-
-    from pokertracker_cassandra_st_spark.registry import WINDOW_R4
-
-    r04 = set(json.load(open("/root/repo/CORRECTNESS_r04.json")))
-    assert r04 == set(WINDOW_R4), (
-        f"r04 artifact vs WINDOW_R4: missing={sorted(set(WINDOW_R4) - r04)} "
-        f"extra={sorted(r04 - set(WINDOW_R4))}"
-    )
-
-
-def test_round5_window_ran_as_planned():
-    """Historical pin: CORRECTNESS_r05.json must cover exactly the 50
-    WINDOW_R5 slots — the round-5 rotation executed as drafted."""
-    import json
-
-    from pokertracker_cassandra_st_spark.registry import WINDOW_R5
-
-    r05 = set(json.load(open("/root/repo/CORRECTNESS_r05.json")))
-    assert r05 == set(WINDOW_R5), (
-        f"r05 artifact vs WINDOW_R5: missing={sorted(set(WINDOW_R5) - r05)} "
-        f"extra={sorted(r05 - set(WINDOW_R5))}"
-    )
-
-
-def test_round5_window_leads_with_backlog():
-    """Round-5 rotation contract (VERDICT r4 'Next round #1/#2'): the
-    leading 33 slots are EXACTLY the never-driver-checked backlog as of
-    round-4 close (DEFERRED_R5 + POST_ROTATION_R4, now including the 4
-    queries stranded by round 4's final commit); the 17 rep slots all
-    carry a prior driver row; any query registered DURING round 5 must
-    join POST_ROTATION_R5 (it cannot have a driver row yet) or this test
-    fails loudly."""
-    from pokertracker_cassandra_st_spark.registry import (
-        DEFERRED_R5,
-        POST_ROTATION_R4,
-        POST_ROTATION_R5,
-        WINDOW_R5,
-    )
-
-    qs = get_queries()
-    oracles = get_oracles()
-    assert len(WINDOW_R5) == 50 == len(set(WINDOW_R5))
-    unreg = [n for n in WINDOW_R5 if n not in qs]
-    assert not unreg, f"WINDOW_R5 names not registered: {unreg}"
-    no_oracle = [n for n in WINDOW_R5 if n not in oracles]
-    assert not no_oracle, f"WINDOW_R5 entries without an oracle: {no_oracle}"
-
-    must_lead = set(DEFERRED_R5) | set(POST_ROTATION_R4)
-    assert len(must_lead) == 33
-    lead = WINDOW_R5[: len(must_lead)]
-    assert set(lead) == must_lead, (
-        f"leading slots must be exactly the never-checked backlog; "
-        f"missing={sorted(must_lead - set(lead))} extra={sorted(set(lead) - must_lead)}"
-    )
-    # leading slots must not waste a slot on a query already checked in
-    # rounds 1-4 (r05's own rows, once the driver writes them, are fine)
-    import glob
-    import json
-    import re
-
-    # "checked before round 5" means artifacts from rounds 1-4 ONLY:
-    # later rounds renew old rows (r10 renewed 16 round-4-era queries),
-    # so an open-ended glob would retroactively poison this set
-    # (VERDICT r10 'What's wrong #1').
-    pre_r5: set[str] = set()
-    for f in sorted(glob.glob("/root/repo/CORRECTNESS_r[0-9]*.json")):
-        rnd = int(re.search(r"_r(\d+)", f).group(1))
-        if rnd < 5:
-            pre_r5 |= set(json.load(open(f)))
-    wasted = sorted(set(lead) & pre_r5)
-    assert not wasted, f"leading slots wasted on driver-checked queries: {wasted}"
-    # nothing registered without bookkeeping: every never-checked query
-    # is either in the leading block or in a round-additions ledger
-    # (registrations from LATER rounds live in their own POST_ROTATION
-    # ledgers — checked by each round's own contract test, excluded
-    # here so this historical pin stays round-5-scoped)
-    from pokertracker_cassandra_st_spark.registry import _LEDGER
-
-    later_eras = {n for n, era, _w in _LEDGER if era >= 6}
-    checked = _driver_checked()
-    never = {n for n in qs if n not in checked}
-    stranded = sorted(
-        never - must_lead - set(POST_ROTATION_R5) - later_eras
-    )
-    assert not stranded, (
-        f"queries registered during round 5 without joining "
-        f"POST_ROTATION_R5: {stranded}"
-    )
-    undeclared = [n for n in POST_ROTATION_R5 if n not in qs]
-    assert not undeclared, f"POST_ROTATION_R5 names not registered: {undeclared}"
-    # the 17 rep slots must all carry a prior driver row (they trade a
-    # window slot for freshness, not first-time coverage)
-    reps = WINDOW_R5[len(must_lead):]
-    unchecked_reps = sorted(set(reps) - checked)
-    assert not unchecked_reps, f"rep slots lacking any driver row: {unchecked_reps}"
 
 
 def test_full_registry_artifact_is_current():
@@ -208,278 +88,3 @@ def test_full_registry_artifact_is_current():
     assert art["n_fail"] == 0, f"latest full artifact has failures: {art['n_fail']}"
     failed = sorted(n for n, r in art["queries"].items() if r["match"] is False)
     assert not failed, f"failed rows in latest full artifact: {failed}"
-
-
-def test_round6_window_ran_as_planned():
-    """Historical pin: CORRECTNESS_r06.json must cover exactly the 50
-    WINDOW_R6 slots — the round-6 rotation executed as drafted."""
-    import json
-
-    from pokertracker_cassandra_st_spark.registry import WINDOW_R6
-
-    r06 = set(json.load(open("/root/repo/CORRECTNESS_r06.json")))
-    assert r06 == set(WINDOW_R6), (
-        f"r06 artifact vs WINDOW_R6: missing={sorted(set(WINDOW_R6) - r06)} "
-        f"extra={sorted(r06 - set(WINDOW_R6))}"
-    )
-
-
-def test_round7_window_ran_as_planned():
-    """Historical pin: CORRECTNESS_r07.json must cover exactly the 50
-    WINDOW_R7 slots — the round-7 rotation executed as drafted."""
-    import json
-
-    from pokertracker_cassandra_st_spark.registry import WINDOW_R7
-
-    r07 = set(json.load(open("/root/repo/CORRECTNESS_r07.json")))
-    assert r07 == set(WINDOW_R7), (
-        f"r07 artifact vs WINDOW_R7: missing={sorted(set(WINDOW_R7) - r07)} "
-        f"extra={sorted(r07 - set(WINDOW_R7))}"
-    )
-
-
-def test_round8_window_ran_as_planned():
-    """Historical pin: CORRECTNESS_r08.json must cover exactly the 50
-    WINDOW_R8 slots — the round-8 rotation executed as drafted."""
-    import json
-
-    from pokertracker_cassandra_st_spark.registry import WINDOW_R8
-
-    r08 = set(json.load(open("/root/repo/CORRECTNESS_r08.json")))
-    assert r08 == set(WINDOW_R8), (
-        f"r08 artifact vs WINDOW_R8: missing={sorted(set(WINDOW_R8) - r08)} "
-        f"extra={sorted(r08 - set(WINDOW_R8))}"
-    )
-
-
-def test_round9_window_ran_as_planned():
-    """Historical pin: CORRECTNESS_r09.json must cover exactly the 50
-    WINDOW_R9 slots — the round-9 rotation executed as drafted."""
-    import json
-
-    from pokertracker_cassandra_st_spark.registry import WINDOW_R9
-
-    r09 = set(json.load(open("/root/repo/CORRECTNESS_r09.json")))
-    assert r09 == set(WINDOW_R9), (
-        f"r09 artifact vs WINDOW_R9: missing={sorted(set(WINDOW_R9) - r09)} "
-        f"extra={sorted(r09 - set(WINDOW_R9))}"
-    )
-
-
-def test_round10_window_ran_as_planned():
-    """Historical pin: CORRECTNESS_r10.json must cover exactly the 50
-    WINDOW_R10 slots — the round-10 rotation executed as drafted,
-    including q_fn_geo's forced re-land (driver-green there)."""
-    import json
-
-    from pokertracker_cassandra_st_spark.registry import WINDOW_R10
-
-    r10 = set(json.load(open("/root/repo/CORRECTNESS_r10.json")))
-    assert r10 == set(WINDOW_R10), (
-        f"r10 artifact vs WINDOW_R10: missing={sorted(set(WINDOW_R10) - r10)} "
-        f"extra={sorted(r10 - set(WINDOW_R10))}"
-    )
-    assert "q_fn_geo" in r10
-
-
-def test_round11_window_ran_as_planned():
-    """Historical pin: CORRECTNESS_r11.json must cover exactly the 50
-    WINDOW_R11 slots — the round-11 rotation executed as drafted:
-    era-10 minus the named DEFERRED_R11 overflow (q_ts_bursts was
-    deferred by name, never silently truncated by plan_window's
-    [:size])."""
-    import json
-
-    from pokertracker_cassandra_st_spark.registry import (
-        DEFERRED_R11,
-        POST_ROTATION_R10,
-        WINDOW_R11,
-    )
-
-    r11 = set(json.load(open("/root/repo/CORRECTNESS_r11.json")))
-    assert r11 == set(WINDOW_R11), (
-        f"r11 artifact vs WINDOW_R11: missing={sorted(set(WINDOW_R11) - r11)} "
-        f"extra={sorted(r11 - set(WINDOW_R11))}"
-    )
-    assert DEFERRED_R11 == ["q_ts_bursts"]
-    assert set(WINDOW_R11) == set(POST_ROTATION_R10) - set(DEFERRED_R11)
-    assert "q_ts_bursts" not in WINDOW_R11
-
-
-def test_round12_window_ran_as_planned():
-    """Historical pin: CORRECTNESS_r12.json must cover exactly the 50
-    WINDOW_R12 slots — 39 never-driver-checked leads (the 38 round-11
-    additions + the named DEFERRED_R11 overflow q_ts_bursts, which led
-    outright) and 11 renewal slots that all went to round-5-stale
-    driver rows."""
-    import json
-
-    from pokertracker_cassandra_st_spark.registry import (
-        DEFERRED_R11,
-        POST_ROTATION_R11,
-        WINDOW_R12,
-        _WINDOWS,
-    )
-
-    r12 = set(json.load(open("/root/repo/CORRECTNESS_r12.json")))
-    assert r12 == set(WINDOW_R12), (
-        f"r12 artifact vs WINDOW_R12: missing={sorted(set(WINDOW_R12) - r12)} "
-        f"extra={sorted(r12 - set(WINDOW_R12))}"
-    )
-    assert WINDOW_R12[0] == "q_ts_bursts", "the deferral must lead"
-    lead = [n for n in WINDOW_R12 if _WINDOWS[n] == (12,)]
-    assert len(lead) == 39
-    assert set(lead) == set(POST_ROTATION_R11) | set(DEFERRED_R11)
-    reps = WINDOW_R12[len(lead):]
-    assert len(reps) == 11
-    assert all(_WINDOWS[n][:2] == (5, 12) for n in reps), (
-        "round-12 renewals were exactly the stalest round-5 rows"
-    )
-
-
-def test_round13_window_is_active_and_completes_driver_coverage():
-    """Round-13 rotation contract (VERDICT r12 'Next round #4'):
-    WINDOW_R13 is the active window, materializing plan_window(13)
-    exactly — 14 never-driver-checked leads (the round-12 additions:
-    the 5 derived-partsupp TPC-H shapes, srm, assortativity,
-    mad_anomaly, key_audit, balanced, hapax, threshold_curve,
-    stream_funnel, delta_ratio_var) and 36 renewal slots headed by the
-    6 remaining round-5-stale rows then the round-6-stale block.
-    After this window lands, every ledgered query has a driver row —
-    full 369/369 cumulative driver coverage for the first time."""
-    from pokertracker_cassandra_st_spark.registry import (
-        POST_ROTATION_R12,
-        POST_ROTATION_R13,
-        WINDOW_R13,
-        _WINDOWS,
-        plan_window,
-    )
-
-    qs = get_queries()
-    oracles = get_oracles()
-    assert WINDOW is WINDOW_R13, "round-13 window must be active"
-    assert len(WINDOW_R13) == 50 == len(set(WINDOW_R13))
-    # the flip materialized plan_window(13) as drafted AT FLIP TIME;
-    # queries registered DURING round 13 join POST_ROTATION_R13 and
-    # lead plan_window(14) instead (they cannot displace a committed
-    # window slot).
-    drafted = plan_window(13, size=50 + len(POST_ROTATION_R13))
-    assert WINDOW_R13 == [
-        n for n in drafted if n not in set(POST_ROTATION_R13)
-    ][:50], "WINDOW_R13 must be plan_window(13) as of the flip commit"
-    unreg = [n for n in WINDOW_R13 if n not in qs]
-    assert not unreg, f"WINDOW_R13 names not registered: {unreg}"
-    no_oracle = [n for n in WINDOW_R13 if n not in oracles]
-    assert not no_oracle, f"WINDOW_R13 entries without an oracle: {no_oracle}"
-    # lead block = every never-driver-checked query, exactly the 14
-    # round-12 additions — none stranded, none wasted
-    lead = [n for n in WINDOW_R13 if _WINDOWS[n] == (13,)]
-    assert len(lead) == 14
-    assert set(lead) == set(POST_ROTATION_R12)
-    checked = _driver_checked()
-    never = {n for n in qs if n not in checked}
-    stranded = sorted(never - set(lead) - set(POST_ROTATION_R13))
-    assert not stranded, (
-        f"queries registered during round 13 without joining "
-        f"POST_ROTATION_R13: {stranded}"
-    )
-    # the 36 renewal slots: stalest-first — the 6 round-5-stale rows
-    # that missed round 12's 11 slots head the block (VERDICT r11
-    # 'Next round #3' pre-stage, now materialized), then 30
-    # round-6-stale rows; each carries a prior driver row
-    reps = WINDOW_R13[len(lead):]
-    assert len(reps) == 36
-    stale5 = {
-        "q_graph_degree_hist",
-        "q_graph_jaccard",
-        "q_ts_changepoint",
-        "q_text_winnow",
-        "q_text_cooccurrence",
-        "q_pipeline_interleave",
-    }
-    assert set(reps[:6]) == stale5, (
-        "round-13 renewals must head with the 6 remaining round-5-stale rows"
-    )
-    assert all(max(x for x in _WINDOWS[n] if x < 13) == 6 for n in reps[6:]), (
-        "remaining round-13 renewals must all be round-6-stale rows"
-    )
-    unchecked_reps = sorted(set(reps) - checked)
-    assert not unchecked_reps, f"rep slots lacking any driver row: {unchecked_reps}"
-
-
-def test_round14_renewals_prestaged_with_stale6_rows():
-    """Round-14 pre-stage contract: after the r13 flip the stalest
-    driver rows are the round-6 renewals that did not fit round 13's
-    36 slots; plan_window(14)'s renewal block must head with
-    round-6-stale rows (era-13 additions, if any, lead)."""
-    from pokertracker_cassandra_st_spark.registry import (
-        _WINDOWS,
-        plan_window,
-    )
-
-    stale6 = {n for n, w in _WINDOWS.items() if w and max(w) == 6}
-    assert stale6, "some round-6-stale rows must remain after the r13 flip"
-    pw14 = plan_window(14)
-    lead14 = [n for n in pw14 if not any(x < 14 for x in _WINDOWS[n])]
-    reps14 = pw14[len(lead14):]
-    head = reps14[: len(stale6)] if len(stale6) <= len(reps14) else reps14
-    assert set(head) <= stale6, (
-        "round-14 renewal block must head with round-6-stale rows"
-    )
-
-
-def test_round7_window_is_staged_correctly():
-    """WINDOW_R7 pre-staging contract: built dynamically from
-    POST_ROTATION_R6 (late round-6 registrations automatically lead it),
-    topped up from a rep pool whose every name carries a prior driver
-    row, to exactly 50 distinct, registered, oracle-backed slots."""
-    from pokertracker_cassandra_st_spark.registry import (
-        _R7_REP_POOL,
-        POST_ROTATION_R6,
-        _window_r7,
-    )
-
-    qs = get_queries()
-    oracles = get_oracles()
-    w7 = _window_r7()
-    assert w7[: len(POST_ROTATION_R6)] == list(POST_ROTATION_R6)
-    assert len(w7) == 50 == len(set(w7)), (
-        f"WINDOW_R7 must hold exactly 50 distinct slots, has {len(w7)} — "
-        f"grow _R7_REP_POOL or trim after growing POST_ROTATION_R6"
-    )
-    unreg = [n for n in w7 if n not in qs]
-    assert not unreg, f"WINDOW_R7 names not registered: {unreg}"
-    no_oracle = [n for n in w7 if n not in oracles]
-    assert not no_oracle, f"WINDOW_R7 entries without an oracle: {no_oracle}"
-    checked = _driver_checked()
-    unchecked_reps = sorted(set(_R7_REP_POOL) - checked)
-    assert not unchecked_reps, f"rep pool names lacking any driver row: {unchecked_reps}"
-
-
-def test_round6_window_is_staged_correctly():
-    """WINDOW_R6 pre-staging contract: the round-6 window is BUILT from
-    POST_ROTATION_R5 (so a late round-5 registration automatically
-    leads it — stranding is structurally impossible), holds exactly 50
-    distinct, registered, oracle-backed slots, and its rep tail carries
-    only queries with a prior driver row. If POST_ROTATION_R5 grows,
-    the length check fails until a rep is trimmed — a loud, local fix."""
-    from pokertracker_cassandra_st_spark.registry import (
-        _R6_REPS,
-        POST_ROTATION_R5,
-        WINDOW_R6,
-    )
-
-    qs = get_queries()
-    oracles = get_oracles()
-    assert WINDOW_R6 == [*POST_ROTATION_R5, *_R6_REPS]
-    assert len(WINDOW_R6) == 50 == len(set(WINDOW_R6)), (
-        f"WINDOW_R6 must hold exactly 50 distinct slots, has "
-        f"{len(WINDOW_R6)} — trim _R6_REPS after growing POST_ROTATION_R5"
-    )
-    unreg = [n for n in WINDOW_R6 if n not in qs]
-    assert not unreg, f"WINDOW_R6 names not registered: {unreg}"
-    no_oracle = [n for n in WINDOW_R6 if n not in oracles]
-    assert not no_oracle, f"WINDOW_R6 entries without an oracle: {no_oracle}"
-    checked = _driver_checked()
-    unchecked_reps = sorted(set(_R6_REPS) - checked)
-    assert not unchecked_reps, f"rep slots lacking any driver row: {unchecked_reps}"

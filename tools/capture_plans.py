@@ -3,8 +3,8 @@
 Usage: python tools/capture_plans.py <suffix> name [name ...] [--sf DIR] [--dir r14] [--unmat]
 Writes plans/<round>/<name>_<suffix>.txt for each query.
 
---unmat stubs every lazy-localCheckpoint barrier (ckpt.materialized and
-the per-module _materialized seams) to identity, so the captured plan
+--unmat stubs the lazy checkpoint barrier (ckpt.materialized, the one
+name every call site goes through) to identity, so the captured plan
 shows the full pre-barrier lineage instead of opaque Scan ExistingRDD
 leaves — the same view tests/test_plans.py::plan_of_unmaterialized
 asserts on.
@@ -48,24 +48,9 @@ def main() -> int:
 
     get_queries()
     if unmat:
-        import importlib
         import pokertracker_cassandra_st_spark.ckpt as ckpt
 
         ckpt.materialized = lambda df: df
-        for mod_name in (
-            "pokertracker_cassandra_st_spark.dist_rank",
-            "pokertracker_cassandra_st_spark.operators.graph",
-            "pokertracker_cassandra_st_spark.operators.analytics",
-            "pokertracker_cassandra_st_spark.llm.dedup",
-            "pokertracker_cassandra_st_spark.llm.similarity",
-            "pokertracker_cassandra_st_spark.llm.text",
-        ):
-            try:
-                mod = importlib.import_module(mod_name)
-            except ImportError:
-                continue
-            if hasattr(mod, "_materialized"):
-                mod._materialized = lambda df: df
     spark = get_spark("capture-plans")
     out_dir = REPO / "plans" / plans_dir
     os.makedirs(out_dir, exist_ok=True)

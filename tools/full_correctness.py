@@ -1,9 +1,8 @@
 """Full-registry correctness artifact — the staleness answer.
 
-The driver's per-round gate (CORRECTNESS_r0N.json) re-verifies only the
-first 50 registry entries; the WINDOW rotation gives every query a
-driver row across rounds, but out-of-window queries would otherwise
-carry silently-stale green rows. This tool runs the SAME differential
+The driver's gate (CORRECTNESS_r0N.json) verifies only the first 50
+registry entries (the fixed registry.WINDOW); every other query would
+otherwise have no current verification. This tool runs the SAME differential
 (tests/differ.assert_frames_match, same sf as the driver's gate) over
 the ENTIRE registry and writes CORRECTNESS_LOCAL_FULL_r0N.json with a
 per-query value hash, so each round ships a current, hash-pinned
