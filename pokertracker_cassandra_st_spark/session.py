@@ -59,6 +59,16 @@ def _host_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
+def _parallelism(spark: SparkSession) -> int:
+    """Task slots of the session: ``defaultParallelism`` (the executors'
+    cores on a cluster, N on local[N]); the host's CPUs when there is no
+    SparkContext (Spark Connect raises an AttributeError for it)."""
+    try:
+        return spark.sparkContext.defaultParallelism
+    except AttributeError:
+        return _host_cpus()
+
+
 def _driver_memory() -> str:
     phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     return f"{max(1, int(phys * _HEAP_FRACTION / 2**30))}g"
@@ -112,7 +122,7 @@ def tune(spark: SparkSession) -> SparkSession:
         except Exception:  # conf locked down — keep going, not fatal
             pass
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(max(_host_cpus(), 8)))
+        spark.conf.set("spark.sql.shuffle.partitions", str(max(_parallelism(spark), 8)))
     except Exception:
         pass
     try:

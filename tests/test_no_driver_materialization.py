@@ -36,7 +36,7 @@ ANY_ARG_ACTIONS = {"head", "take", "toLocalIterator"}
 
 # file -> allowed occurrence count (counted, so silent growth fails)
 EXEMPT: dict[str, int] = {
-    "player_api.py": 4,  # id assignment x2 + GET/findAll serving reads
+    "player_api.py": 2,  # GET/findAll serving reads
     "llm/dedup.py": 1,  # label-propagation convergence probe
     # q_source_binaryfile's 40-file fixture write: it BUILDS the
     # external raw-blob directory the source under test reads — the
