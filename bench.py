@@ -2,23 +2,28 @@
 """Benchmark: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
 Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+  {"metric": "...", "value": N, "unit": "sec", "stat": "...", "queries": {...},
+   "stream_replay_sec": N, "stream_replay_batches": [...], "sf": ...}
 
-Each query is materialized through the noop sink (full execution, no
-driver collection) on local[$SPARK_GRAFT_CPUS].
+Each query is timed as one perfbench operation (``perfbench/run.py``'s
+``invoke``: construct, then execute to the noop sink) on the session
+``session.get_spark`` sizes from the host: one warm-up, then the median of
+three timed runs.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
-import time
 from pathlib import Path
 
 REPO = str(Path(__file__).resolve().parent)
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
+
+from perfbench.run import STREAM_QUERY, Run, SparkProbe, _progress_listener, invoke  # noqa: E402
 
 HEADLINE = [
     "q_replay_projection",  # the reference's core pipeline
@@ -35,106 +40,49 @@ HEADLINE = [
     "q_tpch_q5_shape",      # 6-way star join
     "q_pipeline_curate",    # fused LLM curation pipeline
 ]
+RUNS = 3
+STAT = f"median of {RUNS} runs after 1 warm-up"
 
-# measured once, reported separately — a full stateful streaming run
-# (4 micro-batches, state store, checkpointing) is a different axis
-# than batch SQL throughput and would swamp the headline total
-STREAMING_EXTRA = "q_stream_replay"
+
+def median_wall(run: Run, name: str, sf_dir: str) -> float:
+    invoke(run, name, sf_dir)  # warm-up: JIT, class loading, parquet footers
+    return statistics.median(invoke(run, name, sf_dir)[0] for _ in range(RUNS))
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(os.path.normpath(sf_dir)).replace("sf", "") or 0.1)
 
-    from pokertracker_cassandra_st_spark.registry import REGISTRY, get_queries
+    from pokertracker_cassandra_st_spark.registry import get_queries
     from pokertracker_cassandra_st_spark.session import get_spark
 
     get_queries()
-    spark = get_spark("pokertracker-bench")
-    # warm the JVM + file listing so query timings measure execution
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    run = Run(get_spark("pokertracker-bench"), seed=0)
+    times = {name: round(median_wall(run, name, sf_dir), 3) for name in HEADLINE}
 
-    times: dict[str, float] = {}
-    for name in HEADLINE:
-        fn = REGISTRY[name].fn
-        # one warmup run (JIT/classloading/parquet footer cache), then
-        # report the best of two measured runs — the steady-state
-        # throughput a long-lived cluster session would see.
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = float("inf")
-        for _ in range(3):  # best-of-3: rides out stray GC pauses
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        times[name] = round(best, 3)
-
-    # same methodology as batch: one warmup (materializes the split
-    # cache, JITs the state-store/python-worker path), then measure the
-    # steady-state run a long-lived session would see
-    REGISTRY[STREAMING_EXTRA].fn(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-
-    # per-micro-batch wall instrumentation (VERDICT r12 'Next round
-    # #5'): BENCH_r12 recorded stream_replay at 11.8 s vs a 4.4 s
-    # five-run floor with no per-batch visibility.  A listener records
-    # each progress event's batchId + triggerExecution wall so the
-    # artifact itself shows WHICH micro-batch stalls (scheduler stall
-    # vs code regression) instead of needing a rerun to diagnose.
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    batch_walls: list[dict] = []
-
-    class _BatchWallListener(StreamingQueryListener):
-        def onQueryStarted(self, event):
-            pass
-
-        def onQueryProgress(self, event):
-            p = event.progress
-            batch_walls.append(
-                {
-                    "batch_id": p.batchId,
-                    "trigger_ms": p.durationMs.get("triggerExecution"),
-                    "add_batch_ms": p.durationMs.get("addBatch"),
-                    "rows": p.numInputRows,
-                }
-            )
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            pass
-
-    listener = _BatchWallListener()
-    spark.streams.addListener(listener)
+    # The stateful stream replay (micro-batches, state store, checkpoints)
+    # is a different axis from batch SQL and would swamp the headline
+    # total, so it is reported on its own: one warm-up replay, then one
+    # timed replay with each micro-batch's progress recorded.
+    invoke(run, STREAM_QUERY, sf_dir)
+    listener = _progress_listener()
+    run.spark.streams.addListener(listener)
     try:
-        t0 = time.perf_counter()
-        REGISTRY[STREAMING_EXTRA].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        stream_sec = round(time.perf_counter() - t0, 3)
-        # progress events are delivered async on the listener bus —
-        # give the tail event a moment to land before reading
-        deadline = time.time() + 5.0
-        while time.time() < deadline and not batch_walls:
-            time.sleep(0.1)
-        time.sleep(0.3)
+        stream_sec = invoke(run, STREAM_QUERY, sf_dir)[0]
+        SparkProbe(run.spark).settle()  # progress events arrive on the listener bus
     finally:
-        spark.streams.removeListener(listener)
+        run.spark.streams.removeListener(listener)
 
-    total = round(sum(times.values()), 3)
     print(
         json.dumps(
             {
                 "metric": "headline_queries_total_wall",
-                "value": total,
+                "value": round(sum(times.values()), 3),
                 "unit": "sec",
+                "stat": STAT,
                 "queries": times,
-                "stream_replay_sec": stream_sec,
-                "stream_replay_batches": sorted(
-                    batch_walls, key=lambda b: b["batch_id"]
-                ),
+                "stream_replay_sec": round(stream_sec, 3),
+                "stream_replay_batches": listener.progress,
                 "sf": sf,
             }
         )

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pokertracker_cassandra_st_spark.catalog import table, tables
+from pokertracker_cassandra_st_spark.catalog import scratch_dir, table, tables
 from pokertracker_cassandra_st_spark.exprs import dsum, o_fmt_ts, slong
 from pokertracker_cassandra_st_spark.registry import register
 
@@ -620,10 +620,7 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     with cluster parallelism, not data volume; the only Exchange left
     in the query is the final aggregation's.
     """
-    import os
-
-    os.makedirs("/root/repo/.scratch/bucketed_q", exist_ok=True)
-    base = "/root/repo/.scratch/bucketed_q"
+    base = scratch_dir(sf_dir, "bucketed_q")
     li_t, o_t = "q_jb_lineitem", "q_jb_orders"
     spark.sql(f"DROP TABLE IF EXISTS {li_t}")
     spark.sql(f"DROP TABLE IF EXISTS {o_t}")

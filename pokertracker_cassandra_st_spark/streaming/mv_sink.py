@@ -26,7 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from pokertracker_cassandra_st_spark.plans.mv import full_refresh, incremental_update
-from pokertracker_cassandra_st_spark.streaming.runner import SCRATCH, stream_events
+from pokertracker_cassandra_st_spark.streaming import runner
 
 
 def run_streaming_mv(
@@ -34,8 +34,8 @@ def run_streaming_mv(
 ) -> DataFrame:
     """Stream the event log into an incrementally-maintained MV;
     returns the final MV DataFrame."""
-    os.makedirs(SCRATCH, exist_ok=True)
-    ev = stream_events(spark, sf_dir, n_files=n_files)
+    os.makedirs(runner.SCRATCH, exist_ok=True)
+    ev = runner.stream_events(spark, sf_dir, n_files=n_files)
     # seed an empty MV so every batch takes the incremental path
     full_refresh(ev.sparkSession.createDataFrame([], ev.schema), mv_path)
 

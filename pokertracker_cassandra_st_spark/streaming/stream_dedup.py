@@ -37,7 +37,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pokertracker_cassandra_st_spark.streaming.runner import SCRATCH
+from pokertracker_cassandra_st_spark.streaming import runner
 
 DOCS_RAW_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
@@ -60,7 +60,7 @@ def _split_documents(
     is deterministic and non-empty at every sf."""
     mode = "aug" if augment else "ord"
     key = f"{os.path.basename(os.path.normpath(sf_dir))}_{n_files}_{mode}"
-    out = f"{SCRATCH}/docs_split_v1_{key}"
+    out = f"{runner.SCRATCH}/docs_split_v1_{key}"
     marker = f"{out}/_SUCCESS"
     if not os.path.exists(marker):
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -162,7 +162,7 @@ def run_stream_dedup_near(
 ) -> DataFrame:
     """Stream documents through a foreachBatch near-dup matcher; returns
     the accumulated (id_a=prior, id_b=new, jaccard) matches."""
-    os.makedirs(SCRATCH, exist_ok=True)
+    os.makedirs(runner.SCRATCH, exist_ok=True)
     idx_sh = f"{work_path}/index_shingles"
     idx_n = f"{work_path}/index_counts"
     matches = f"{work_path}/matches"

@@ -308,6 +308,21 @@ def test_bucketed_query_join_has_no_input_exchange(spark, sf_dir):
     assert "Exchange" not in join_and_below
 
 
+def test_bucketed_query_tables_live_in_per_scale_scratch(spark, sf_dir):
+    # two scales must not overwrite each other's bucketed tables
+    from urllib.parse import urlparse
+
+    from pokertracker_cassandra_st_spark.catalog import scratch_dir
+
+    REGISTRY["q_join_bucketed"].fn(spark, sf_dir)
+    loc = (
+        spark.sql("DESCRIBE TABLE EXTENDED q_jb_lineitem")
+        .filter("col_name = 'Location'")
+        .first()["data_type"]
+    )
+    assert urlparse(loc).path == f"{scratch_dir(sf_dir, 'bucketed_q')}/q_jb_lineitem"
+
+
 def test_rollup_hierarchy_reads_materialization_not_raw(spark, sf_dir):
     # q_ts_rollup_hierarchy: all three grains must read the hourly
     # materialization — the returned plan never rescans raw events

@@ -345,3 +345,14 @@ def test_tws_replay_gate_is_loud(spark, sf_dir):
     finally:
         con.close()
     assert_frames_match(pdf, odf, "q_stream_replay_tws")
+
+
+def test_document_split_follows_runner_scratch(spark, sf_dir, tmp_path, monkeypatch):
+    # a process that points runner.SCRATCH elsewhere gets its document
+    # splits there, not in the scratch dir of import time
+    from pokertracker_cassandra_st_spark.streaming import runner, stream_dedup
+
+    monkeypatch.setattr(runner, "SCRATCH", str(tmp_path))
+    out = stream_dedup._split_documents(spark, sf_dir, 2)
+    assert out.startswith(f"{tmp_path}/")
+    assert os.path.exists(f"{out}/_SUCCESS")

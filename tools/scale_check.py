@@ -1,13 +1,15 @@
 """10x scale checkpoint: replicate the sf0.1 tables with shifted keys,
-then re-time and differentially re-check queries at 6M-row scale.
+then differentially re-check queries against DuckDB at 6M-row scale.
 
 This is the sweep that caught the two round-1 scale bugs (per-row
 BigDecimal in F.round; HUGEINT->double rounding above 2^53) — issues
 invisible at the driver's gate scale. Run it after material engine
 changes:
 
-    python tools/scale_check.py            # build + timings
-    python tools/scale_check.py --check    # + DuckDB differential at 10x
+    python tools/scale_check.py            # build + DuckDB differential at 10x
+
+Timing at 10x is ``python3 perfbench/run.py --workload x10``, which builds
+its fixture with ``build`` below.
 
 Replication rules (keeping join semantics intact):
   * lineitem/orders: orderkey shifted by replica * (max+1) on BOTH
@@ -35,41 +37,16 @@ from __future__ import annotations
 import argparse
 import os
 import shutil
+import sys
 import time
+from pathlib import Path
 
 import pandas as pd
 
+REPO = Path(__file__).resolve().parent.parent
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-DST = "/root/repo/.scratch/sf1x10_v3"
+DST = str(REPO / ".scratch" / "sf1x10_v3")
 REPLICAS = 10
-
-TIMED = [
-    "q_agg_groupby",
-    "q_join_sortmerge",
-    "q_win_running",
-    "q_topk",
-    "q_tpch_q3_shape",
-    "q_replay_projection",
-    "q_ts_downsample",
-    "q_ts_sessionize",
-    "q_join_asof",
-    "q_join_asof_tolerance",
-    "q_dedup_exact",
-    "q_text_tfidf",
-    "q_dedup_ngram_jaccard",
-    "q_dedup_components",
-    "q_text_contamination",
-    "q_pipeline_pack",
-    # late round 3 additions
-    "q_join_spatial_grid",
-    "q_ts_ewma",
-    "q_ts_anomaly",
-    "q_text_bigrams",
-    "q_text_charlm",
-    "q_win_islands",
-    "q_sample_weighted",
-    "q_replay_asof_snapshot",
-]
 
 # Differential coverage at 10x is REGISTRY-WIDE: every query either
 # runs the DuckDB differential on the replicated fixture or appears in
@@ -206,123 +183,88 @@ def build(dst: str = DST, replicas: int = REPLICAS) -> str:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--check", action="store_true", help="also run the DuckDB differential")
-    ap.add_argument("--skip-timing", action="store_true", help="differential only")
-    ap.add_argument("--best-of", type=int, default=3)
-    ap.add_argument("--only", default="", help="comma-separated query names: restrict the timing AND differential sets (for re-checking changed queries, or bounded 100x spot-checks)")
+    ap.add_argument("--only", default="", help="comma-separated query names: restrict the differential set (for re-checking changed queries, or bounded 100x spot-checks)")
     ap.add_argument("--replicas", type=int, default=REPLICAS, help="replication factor (10 = the standard sweep; 100 = spot-check)")
     ap.add_argument("--dst", default="", help="fixture directory (defaults to the standard 10x path)")
     args = ap.parse_args()
 
-    dst = args.dst or (DST if args.replicas == REPLICAS else f"/root/repo/.scratch/sf1x{args.replicas}")
+    dst = args.dst or (DST if args.replicas == REPLICAS else str(REPO / ".scratch" / f"sf1x{args.replicas}"))
     sf_dir = build(dst, args.replicas)
 
-    from pyspark.sql import SparkSession
+    import duckdb
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        # 48g: the local[32] driver JVM IS the executor pool — 32
-        # concurrent shuffle-hash build tasks share execution memory,
-        # and the round-13 100x rung showed a single build partition
-        # needing ~256 MB (q_dedup_incremental's candidate frame);
-        # 16g left ~180 MB/task and threw
-        # cannotAcquireMemoryToBuildLongHashedRelation. A cluster
-        # executor has this per-core headroom as a matter of course.
-        .config("spark.driver.memory", "48g")
-        # the differ collects full results driver-side; near-dup pair
-        # sets at 10x replication exceed the 1g default
-        .config("spark.driver.maxResultSize", "6g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
     from pokertracker_cassandra_st_spark.registry import REGISTRY, get_queries
+    from pokertracker_cassandra_st_spark.session import get_spark
+    from tests.differ import assert_frames_match
 
+    # the differ collects full results driver-side; near-dup pair sets at
+    # 10x replication exceed the 1g default. A launch-time conf, so it goes
+    # to the JVM before get_spark starts it.
+    os.environ["PYSPARK_SUBMIT_ARGS"] = "--conf spark.driver.maxResultSize=6g pyspark-shell"
+    spark = get_spark("scale-check")
     get_queries()
 
-    only = set(args.only.split(",")) if args.only else None
-    results = {}
-    timed = [n for n in TIMED if only is None or n in only]
-    for name in ([] if args.skip_timing else timed):
-        fn = REGISTRY[name].fn
-        fn(spark, sf_dir).toPandas()  # warm (JIT, file listing)
-        best = min(
-            _timed(lambda: fn(spark, sf_dir).toPandas()) for _ in range(args.best_of)
-        )
-        results[name] = round(best, 3)
-        print(f"{name:28s} {best:7.3f} s")
-    print({"sf": f"sf0.1 x{args.replicas}", "queries": results})
-
-    if args.check:
-        import duckdb
-
-        from tests.differ import assert_frames_match
-
-        def fresh_con() -> "duckdb.DuckDBPyConnection":
-            c = duckdb.connect()
-            # large-rung oracle tuning: insertion-order preservation
-            # forces DuckDB to keep ordered intermediates for the big
-            # DISTINCT/JOIN pipelines, ballooning temp spill (the
-            # round-13 q_dedup_simhash oracle ENOSPC'd the host's disk
-            # at 100x); order is irrelevant — the differ sorts. An
-            # explicit memory_limit keeps the hash tables in the 128G
-            # RAM instead of .tmp.
-            c.execute("SET preserve_insertion_order = false")
-            c.execute("SET memory_limit = '100GB'")
-            for t in (
-                "region nation customer supplier part orders lineitem events "
-                "documents embeddings"
-            ).split():
-                c.execute(
-                    f"CREATE VIEW {t} AS "
-                    f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-                )
-            return c
-
-        con = fresh_con()
-        failures: list[str] = []
-        names = checked_names(REGISTRY)
-        if only is not None:
-            names = [n for n in names if n in only]
-        for i, name in enumerate(names):
-            # DuckDB's spill files (.tmp/duckdb_temp_storage-*) live for
-            # the CONNECTION: one connection across a 250-query sweep at
-            # 100x accumulated 71 GB and ENOSPC'd the host (round-8
-            # finding). Recycle the connection every few queries so the
-            # spill high-water mark stays one-query-sized.
-            if i and i % 5 == 0:
-                con.close()
-                con = fresh_con()
-            q = REGISTRY[name]
-            t0 = time.perf_counter()
-            try:
-                if name in AGG_CHECK and args.replicas >= AGG_CHECK_MIN_REPLICAS:
-                    n_pairs = _agg_differential(
-                        spark, con, q, sf_dir, AGG_CHECK[name], name
-                    )
-                    print(
-                        f"differential OK  {name:28s} "
-                        f"({time.perf_counter() - t0:6.1f}s)"
-                        f"  [aggregate-level] pairs={n_pairs}",
-                        flush=True,
-                    )
-                    continue
-                pdf = q.fn(spark, sf_dir).toPandas()
-                assert_frames_match(pdf, con.execute(q.oracle).fetchdf(), f"{name}[10x]")
-            except Exception as exc:  # keep sweeping; report all at once
-                failures.append(f"{name}: {exc}")
-                print(f"differential FAIL {name}: {exc}")
-                continue
-            vol = f"  candidates={len(pdf)}" if name in REPORT_VOLUME else ""
-            print(
-                f"differential OK  {name:28s} ({time.perf_counter() - t0:6.1f}s){vol}",
-                flush=True,
+    def fresh_con() -> "duckdb.DuckDBPyConnection":
+        c = duckdb.connect()
+        # large-rung oracle tuning: insertion-order preservation forces
+        # DuckDB to keep ordered intermediates for the big DISTINCT/JOIN
+        # pipelines, ballooning temp spill (the round-13 q_dedup_simhash
+        # oracle ENOSPC'd the host's disk at 100x); order is irrelevant —
+        # the differ sorts.
+        c.execute("SET preserve_insertion_order = false")
+        for t in (
+            "region nation customer supplier part orders lineitem events "
+            "documents embeddings"
+        ).split():
+            c.execute(
+                f"CREATE VIEW {t} AS "
+                f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
             )
-        for name, why in EXCLUDED_10X.items():
-            print(f"differential SKIP {name}: {why}")
-        con.close()
-        if failures:
-            raise SystemExit("10x differential failures:\n" + "\n".join(failures))
+        return c
+
+    con = fresh_con()
+    failures: list[str] = []
+    names = checked_names(REGISTRY)
+    if args.only:
+        only = set(args.only.split(","))
+        names = [n for n in names if n in only]
+    for i, name in enumerate(names):
+        # DuckDB's spill files (.tmp/duckdb_temp_storage-*) live for the
+        # CONNECTION: one connection across a 250-query sweep at 100x
+        # accumulated 71 GB and ENOSPC'd the host (round-8 finding).
+        # Recycle the connection every few queries so the spill high-water
+        # mark stays one-query-sized.
+        if i and i % 5 == 0:
+            con.close()
+            con = fresh_con()
+        q = REGISTRY[name]
+        t0 = time.perf_counter()
+        try:
+            if name in AGG_CHECK and args.replicas >= AGG_CHECK_MIN_REPLICAS:
+                n_pairs = _agg_differential(spark, con, q, sf_dir, AGG_CHECK[name], name)
+                print(
+                    f"differential OK  {name:28s} "
+                    f"({time.perf_counter() - t0:6.1f}s)"
+                    f"  [aggregate-level] pairs={n_pairs}",
+                    flush=True,
+                )
+                continue
+            pdf = q.fn(spark, sf_dir).toPandas()
+            assert_frames_match(pdf, con.execute(q.oracle).fetchdf(), f"{name}[10x]")
+        except Exception as exc:  # keep sweeping; report all at once
+            failures.append(f"{name}: {exc}")
+            print(f"differential FAIL {name}: {exc}")
+            continue
+        vol = f"  candidates={len(pdf)}" if name in REPORT_VOLUME else ""
+        print(
+            f"differential OK  {name:28s} ({time.perf_counter() - t0:6.1f}s){vol}",
+            flush=True,
+        )
+    for name, why in EXCLUDED_10X.items():
+        print(f"differential SKIP {name}: {why}")
+    con.close()
+    if failures:
+        raise SystemExit("10x differential failures:\n" + "\n".join(failures))
 
 
 def _agg_differential(spark, con, q, sf_dir, val_cols, name) -> int:
@@ -377,14 +319,6 @@ def _agg_differential(spark, con, q, sf_dir, val_cols, name) -> int:
     return int(hist["n"].sum())
 
 
-def _timed(f) -> float:
-    t0 = time.perf_counter()
-    f()
-    return time.perf_counter() - t0
-
-
 if __name__ == "__main__":
-    import sys
-
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(REPO))
     main()
