@@ -15,6 +15,7 @@ pruning comes for free when the layout is hive-partitioned.
 
 from __future__ import annotations
 
+import os
 from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, SparkSession
@@ -120,8 +121,14 @@ def tables(spark: SparkSession, sf_dir: str, *names: str) -> SimpleNamespace:
     return SimpleNamespace(**{n: table(spark, sf_dir, n) for n in (names or TABLES)})
 
 
+# The checkout's state root: sink, roundtrip and split directories, the
+# streaming checkpoints and the shipped package zip. Derived from this
+# file's location, so each checkout writes only into its own tree.
+SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
+
+
 def scratch_dir(sf_dir: str, name: str) -> str:
-    """Per-scale scratch path: ``.scratch/<name>_<sf-tag>``.
+    """Per-scale scratch path: ``<SCRATCH>/<name>_<sf-tag>``.
 
     Sink/roundtrip queries write real directories; keying them by the
     sf directory's basename isolates concurrent runs at different
@@ -130,7 +137,5 @@ def scratch_dir(sf_dir: str, name: str) -> str:
     mirrors what rollup_hourly already did. Overwrite mode still
     reclaims each scale's own directory run-to-run.
     """
-    import os
-
     tag = os.path.basename(sf_dir.rstrip("/")) or "default"
-    return f"/root/repo/.scratch/{name}_{tag}"
+    return f"{SCRATCH}/{name}_{tag}"

@@ -20,10 +20,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pokertracker_cassandra_st_spark.catalog import scratch_dir, table
+from pokertracker_cassandra_st_spark.catalog import SCRATCH, scratch_dir, table
 from pokertracker_cassandra_st_spark.registry import register
-
-SCRATCH = "/root/repo/.scratch"
 
 
 @register(

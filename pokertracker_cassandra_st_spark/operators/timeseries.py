@@ -21,11 +21,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pokertracker_cassandra_st_spark.catalog import table
+from pokertracker_cassandra_st_spark.catalog import SCRATCH, table
 from pokertracker_cassandra_st_spark.exprs import DEC, MONEY, fmt_ts
 from pokertracker_cassandra_st_spark.registry import register
-
-SCRATCH = "/root/repo/.scratch"
 
 
 @register(

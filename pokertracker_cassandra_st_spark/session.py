@@ -80,7 +80,7 @@ def _ship_package(spark: SparkSession) -> None:
 
     Module-level UDF functions (pandas UDFs, mapInPandas, stateful
     folds) pickle BY REFERENCE — the worker must import the module. A
-    driver started outside /root/repo has no such path, so we zip the
+    driver started outside the checkout has no such path, so we zip the
     package once per session and addPyFile it (works on a session we
     didn't create, and on a real cluster ships to every executor).
     """
@@ -93,9 +93,11 @@ def _ship_package(spark: SparkSession) -> None:
     try:
         import zipfile
 
+        from pokertracker_cassandra_st_spark.catalog import SCRATCH
+
         pkg_dir = os.path.dirname(os.path.abspath(__file__))
         root = os.path.dirname(pkg_dir)
-        zpath = os.path.join(root, ".scratch", "pokertracker_pkg.zip")
+        zpath = os.path.join(SCRATCH, "pokertracker_pkg.zip")
         os.makedirs(os.path.dirname(zpath), exist_ok=True)
         sources = [
             os.path.join(dirpath, f)

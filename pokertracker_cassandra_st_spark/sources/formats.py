@@ -19,11 +19,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pokertracker_cassandra_st_spark.catalog import scratch_dir, table
+from pokertracker_cassandra_st_spark.catalog import SCRATCH, scratch_dir, table
 from pokertracker_cassandra_st_spark.exprs import dsum, o_dsum
 from pokertracker_cassandra_st_spark.registry import register
-
-SCRATCH = "/root/repo/.scratch"
 
 _AGG_ORACLE = f"""
 SELECT o_orderstatus,

@@ -23,7 +23,11 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-SCRATCH = "/root/repo/.scratch"
+from pokertracker_cassandra_st_spark import catalog
+
+# Read at call time, so a process may point the stream state elsewhere.
+SCRATCH = catalog.SCRATCH
+
 
 def events_raw_schema(sf_dir: str) -> str:
     """DDL schema for the raw events stream source, matching the on-disk
@@ -179,13 +183,7 @@ def run_to_table(stream_df: DataFrame, output_mode: str) -> DataFrame:
     JVM-stateful 8-micro-batch queries the per-partition commit cost
     dominates and 32 partitions nearly DOUBLES wall time
     (q_stream_chained 3.7 s -> 6.7 s, q_stream_latedata 3.7 s ->
-    6.6 s), while the one Python-fold query gains only ~8% from the
-    extra worker parallelism (q_stream_replay 5.4 s -> 5.0 s; the
-    BASELINE.md ladder's 5.7 -> 4.5-5.0 s for the same 8 -> 32 step
-    is a different run of the same probe inside the documented ±30%
-    host band — the ~8% relative gain is the stable quantity) — so 8
-    is the right trade at this state volume, and BASELINE.md records
-    q_stream_replay's ~5 s as its micro-batch-overhead floor.
+    6.6 s) — so 8 is the right trade at this state volume.
     """
     spark = stream_df.sparkSession
     name = f"sink_{uuid.uuid4().hex[:12]}"

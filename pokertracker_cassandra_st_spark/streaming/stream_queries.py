@@ -25,126 +25,43 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from pokertracker_cassandra_st_spark.catalog import table
 from pokertracker_cassandra_st_spark.exprs import fround, o_fmt_ts
-from pokertracker_cassandra_st_spark.operators.replay import TOMBSTONE
+from pokertracker_cassandra_st_spark.plans.mv import READ_MODEL_ORACLE, fold, latest, read_model
 from pokertracker_cassandra_st_spark.registry import register
 from pokertracker_cassandra_st_spark.streaming.runner import run_to_table, stream_events
 
-_FOLD_OUT_SCHEMA = (
-    "user_id long, last_event_id long, last_event_type string, last_value double"
-)
-_FOLD_STATE_SCHEMA = "last_event_id long, last_event_type string, last_value double"
+
+def _replay(spark: SparkSession, sf_dir: str, shuffled: bool) -> DataFrame:
+    """plans/mv's fold as a streaming aggregation over 4 micro-batches.
+    The update-mode sink holds one row per key per batch that changed
+    it; ``latest`` keeps the newest, ``read_model`` hides tombstones."""
+    ev = stream_events(spark, sf_dir, n_files=4, shuffled=shuffled)
+    return read_model(latest(run_to_table(fold(ev), "update")))
 
 
-def _fold(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-    """Per-key fold: keep the event with the highest event_id (the
-    global version sequence — Tier A13 ordering guarantee)."""
-    (user_id,) = key
-    if state.exists:
-        best_id, best_type, best_value = state.get
-    else:
-        best_id, best_type, best_value = -1, "", 0.0
-    for pdf in pdf_iter:
-        if len(pdf) == 0:
-            continue
-        idx = pdf["event_id"].idxmax()
-        if int(pdf["event_id"][idx]) > best_id:
-            best_id = int(pdf["event_id"][idx])
-            best_type = str(pdf["event_type"][idx])
-            best_value = float(pdf["value"][idx])
-    state.update((best_id, best_type, best_value))
-    yield pd.DataFrame(
-        {
-            "user_id": [user_id],
-            "last_event_id": [best_id],
-            "last_event_type": [best_type],
-            "last_value": [best_value],
-        }
-    )
-
-
-@register(
-    "q_stream_replay",
-    oracle=f"""
-SELECT user_id,
-       max(event_id) AS last_event_id,
-       max_by(event_type, event_id) AS last_event_type,
-       (list(value ORDER BY event_id DESC))[1] AS last_value
-FROM events
-GROUP BY user_id
-HAVING max_by(event_type, event_id) <> '{TOMBSTONE}'
-""",
-    tags=("stream", "tier-a"),
-)
+@register("q_stream_replay", oracle=READ_MODEL_ORACLE, tags=("stream", "tier-a"))
 def q_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference pipeline as arbitrary stateful streaming:
-    event stream → per-key applyInPandasWithState fold → projection,
-    tombstoned keys dropped. Runs over 4 micro-batches so state
-    genuinely carries across batches; oracle = batch recomputation.
-    """
-    ev = stream_events(spark, sf_dir, n_files=4)
-    folded = ev.groupBy("user_id").applyInPandasWithState(
-        _fold,
-        outputStructType=_FOLD_OUT_SCHEMA,
-        stateStructType=_FOLD_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    sink = run_to_table(folded, "update")
-    # update-mode sink holds one row per (key, batch); latest wins.
-    return (
-        sink.groupBy("user_id")
-        .agg(
-            F.max("last_event_id").alias("last_event_id"),
-            F.max_by("last_event_type", "last_event_id").alias("last_event_type"),
-            F.max_by("last_value", "last_event_id").alias("last_value"),
-        )
-        .filter(F.col("last_event_type") != TOMBSTONE)
-    )
+    """The reference pipeline as a stateful streaming job: event stream
+    in arrival order -> per-key latest event in the state store ->
+    projection, tombstoned keys dropped. Runs over 4 micro-batches so
+    state genuinely carries across batches; oracle = batch
+    recomputation."""
+    return _replay(spark, sf_dir, shuffled=False)
 
 
-@register(
-    "q_stream_outoforder",
-    oracle=f"""
-SELECT user_id,
-       max(event_id) AS last_event_id,
-       max_by(event_type, event_id) AS last_event_type,
-       (list(value ORDER BY event_id DESC))[1] AS last_value
-FROM events
-GROUP BY user_id
-HAVING max_by(event_type, event_id) <> '{TOMBSTONE}'
-""",
-    tags=("stream", "tier-a"),
-)
+@register("q_stream_outoforder", oracle=READ_MODEL_ORACLE, tags=("stream", "tier-a"))
 def q_stream_outoforder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The replay fold under DISORDERED arrival: micro-batches are
+    """The replay under DISORDERED arrival: micro-batches are
     hash-scattered slices of the log, so each batch delivers events both
     newer and older than anything already folded — the reference's
     read-your-writes invariant (``PlayerResourceIT.java:126-171``) must
     hold regardless of delivery order.
 
-    The per-key fold keeps the max event_id (the version sequence,
-    Tier A13), which is order-insensitive by construction, so streaming
-    state converges to exactly the batch recomputation (the oracle) even
+    The fold keeps the max event_id (the version sequence, Tier A13),
+    which is order-insensitive by construction, so streaming state
+    converges to exactly the batch recomputation (the oracle) even
     though arrival order is scrambled. No watermark on the fold — late
     events must still apply, not drop."""
-    ev = stream_events(spark, sf_dir, n_files=4, shuffled=True)
-    folded = ev.groupBy("user_id").applyInPandasWithState(
-        _fold,
-        outputStructType=_FOLD_OUT_SCHEMA,
-        stateStructType=_FOLD_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    sink = run_to_table(folded, "update")
-    return (
-        sink.groupBy("user_id")
-        .agg(
-            F.max("last_event_id").alias("last_event_id"),
-            F.max_by("last_event_type", "last_event_id").alias("last_event_type"),
-            F.max_by("last_value", "last_event_id").alias("last_value"),
-        )
-        .filter(F.col("last_event_type") != TOMBSTONE)
-    )
+    return _replay(spark, sf_dir, shuffled=True)
 
 
 @register(
@@ -413,19 +330,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_table(joined, "append")
 
 
-@register(
-    "q_stream_mv_merge",
-    oracle=f"""
-SELECT user_id,
-       max(event_id) AS last_event_id,
-       max_by(event_type, event_id) AS last_event_type,
-       (list(value ORDER BY event_id DESC))[1] AS last_value
-FROM events
-GROUP BY user_id
-HAVING max_by(event_type, event_id) <> '{TOMBSTONE}'
-""",
-    tags=("stream", "tier-a"),
-)
+@register("q_stream_mv_merge", oracle=READ_MODEL_ORACLE, tags=("stream", "tier-a"))
 def q_stream_mv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The deployment-shaped sink: foreachBatch -> incrementally merged
     parquet materialized view (streaming/mv_sink.py), then read the MV
@@ -440,7 +345,6 @@ def q_stream_mv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     swap stands in for a lakehouse MERGE INTO."""
     import os
 
-    from pokertracker_cassandra_st_spark.plans.mv import read_model
     from pokertracker_cassandra_st_spark.streaming.mv_sink import run_streaming_mv
     from pokertracker_cassandra_st_spark.streaming.runner import SCRATCH
 

@@ -1,9 +1,10 @@
 """Replay fold on transformWithStateInPandas — Spark 4's typed
 stateful-processing API (the successor to applyInPandasWithState).
 
-Same semantics as q_stream_replay's fold, expressed as a
-StatefulProcessor with an explicit ValueState handle. What the new API
-buys at scale: typed state handles (value/list/map) instead of one
+Same semantics as plans/mv's fold (which q_stream_replay runs as a
+JVM streaming aggregate), expressed as a Python StatefulProcessor with
+an explicit ValueState handle: the reference for this API. What the
+new API buys at scale: typed state handles (value/list/map) instead of one
 opaque tuple, per-state TTL, timers, and first-class RocksDB state
 store integration — the pieces needed to run per-key state over
 billions of keys with bounded memory.
@@ -15,7 +16,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.types import (
     DoubleType,
@@ -25,7 +25,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pokertracker_cassandra_st_spark.operators.replay import TOMBSTONE
+from pokertracker_cassandra_st_spark.plans.mv import READ_MODEL_ORACLE, latest, read_model
 from pokertracker_cassandra_st_spark.registry import register
 from pokertracker_cassandra_st_spark.streaming.runner import run_to_table, stream_events
 
@@ -129,28 +129,12 @@ def q_stream_replay_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         sink = run_to_table(folded, "update")
     finally:
         spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    return (
-        sink.groupBy("user_id")
-        .agg(
-            F.max("last_event_id").alias("last_event_id"),
-            F.max_by("last_event_type", "last_event_id").alias("last_event_type"),
-            F.max_by("last_value", "last_event_id").alias("last_value"),
-        )
-        .filter(F.col("last_event_type") != TOMBSTONE)
-    )
+    return read_model(latest(sink))
 
 
 if _tws_available():  # pragma: no cover - environment dependent
     register(
         "q_stream_replay_tws",
-        oracle=f"""
-SELECT user_id,
-       max(event_id) AS last_event_id,
-       max_by(event_type, event_id) AS last_event_type,
-       (list(value ORDER BY event_id DESC))[1] AS last_value
-FROM events
-GROUP BY user_id
-HAVING max_by(event_type, event_id) <> '{TOMBSTONE}'
-""",
+        oracle=READ_MODEL_ORACLE,
         tags=("stream", "tier-a"),
     )(q_stream_replay_tws)

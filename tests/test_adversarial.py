@@ -21,7 +21,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from pokertracker_cassandra_st_spark.catalog import TABLES
+from pokertracker_cassandra_st_spark.catalog import SCRATCH, TABLES
 from pokertracker_cassandra_st_spark.registry import REGISTRY, get_queries
 
 from tests.differ import assert_frames_match, duck_connection
@@ -29,7 +29,7 @@ from tests.differ import assert_frames_match, duck_connection
 get_queries()
 
 BASE = "/root/testdata/sf0.001"
-ADV = "/root/repo/.scratch/adversarial"
+ADV = f"{SCRATCH}/adversarial"
 
 # batch queries over events that must survive skew+nulls
 EVENT_QUERIES = [

@@ -95,7 +95,9 @@ def test_bucketed_join_eliminates_shuffle(spark, sf_dir):
     # Exchange at all (co-located bucketed scans feed SortMergeJoin)
     import os
 
-    base = "/root/repo/.scratch/bucketed"
+    from pokertracker_cassandra_st_spark.catalog import SCRATCH
+
+    base = f"{SCRATCH}/bucketed"
     os.makedirs(base, exist_ok=True)
     spark.sql("DROP TABLE IF EXISTS li_b")
     spark.sql("DROP TABLE IF EXISTS o_b")

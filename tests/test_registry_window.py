@@ -72,11 +72,12 @@ def test_full_registry_artifact_is_current():
     registered query with zero failures.  The moment a query registers
     without a regenerated artifact, this test is red — 'registered but
     never hash-pinned' becomes a CI failure, not a judge finding."""
-    import glob
     import json
+    from pathlib import Path
 
     qs = set(get_queries())
-    paths = sorted(glob.glob("/root/repo/CORRECTNESS_LOCAL_FULL_r[0-9]*.json"))
+    repo = Path(__file__).resolve().parents[1]
+    paths = sorted(map(str, repo.glob("CORRECTNESS_LOCAL_FULL_r[0-9]*.json")))
     assert paths, "no CORRECTNESS_LOCAL_FULL artifact found"
     art = json.load(open(paths[-1]))
     pinned = set(art["queries"])

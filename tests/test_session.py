@@ -1,8 +1,13 @@
-"""Session sizing is derived from the host, not from a fixed default."""
+"""Session sizing is derived from the host, and the state root from the
+checkout, not from fixed defaults."""
 
 from __future__ import annotations
 
 import os
+import shutil
+import subprocess
+import sys
+from pathlib import Path
 
 from pokertracker_cassandra_st_spark import session
 from pokertracker_cassandra_st_spark.session import tune
@@ -31,3 +36,31 @@ def test_tune_sizes_shuffle_partitions_from_default_parallelism(spark, monkeypat
             assert spark.conf.get("spark.sql.shuffle.partitions") == want, host_cpus
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+def test_state_root_follows_the_checkout(tmp_path):
+    # A second copy of the package keeps its sinks, splits and
+    # checkpoints in its own tree, never in the first checkout's.
+    pkg = "pokertracker_cassandra_st_spark"
+    src = Path(__file__).resolve().parents[1] / pkg
+    shutil.copytree(src, tmp_path / pkg, ignore=shutil.ignore_patterns("__pycache__"))
+    probe = f"""
+import sys
+sys.path.insert(0, {str(tmp_path)!r})
+from {pkg} import catalog
+from {pkg}.operators import scans, timeseries
+from {pkg}.sources import formats
+from {pkg}.streaming import runner
+assert catalog.__file__.startswith({str(tmp_path)!r}), catalog.__file__
+print(catalog.scratch_dir("/data/sf0.1", "sink"))
+for m in (catalog, runner, scans, timeseries, formats):
+    print(m.SCRATCH)
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=tmp_path, env=env,
+        capture_output=True, text=True, check=True,
+    ).stdout.split()
+    root = f"{tmp_path}/.scratch"
+    assert out[0] == f"{root}/sink_sf0.1"
+    assert out[1:] == [root] * 5

@@ -4,7 +4,8 @@
    closed windows (the reference's implicit invariant: the projection
    equals a replay of the full log).
 2. Watermarks actually DROP late data when arrival is out of order.
-3. The stateful replay fold carries state across micro-batches.
+3. The stateful replay fold carries state across micro-batches, and
+   runs as a JVM aggregate rather than a Python stateful worker.
 """
 
 from __future__ import annotations
@@ -12,6 +13,7 @@ from __future__ import annotations
 import os
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from pokertracker_cassandra_st_spark.catalog import table
@@ -159,6 +161,33 @@ def test_replay_state_spans_batches(spark, sf_dir):
     )
     merged = out.merge(batch, on="user_id", suffixes=("", "_b"))
     assert (merged["last_event_id"] == merged["last_event_id_b"]).all()
+
+
+class _Captured(Exception):
+    pass
+
+
+@pytest.mark.parametrize("name", ["q_stream_replay", "q_stream_outoforder"])
+def test_replay_fold_is_a_jvm_aggregate(spark, sf_dir, monkeypatch, name):
+    # The read model's fold runs as a streaming aggregate in the state
+    # store, not as a Python stateful worker. The stream is captured on
+    # its way to the sink and never started.
+    from pokertracker_cassandra_st_spark.streaming import stream_queries
+
+    handed = []
+
+    def capture(stream_df, output_mode):
+        handed.append(stream_df)
+        raise _Captured
+
+    monkeypatch.setattr(stream_queries, "run_to_table", capture)
+    with pytest.raises(_Captured):
+        REGISTRY[name].fn(spark, sf_dir)
+    (stream_df,) = handed
+    assert stream_df.isStreaming
+    plan = stream_df._jdf.queryExecution().analyzed().toString()
+    assert "FlatMapGroupsInPandasWithState" not in plan, plan
+    assert "Aggregate" in plan, plan
 
 
 def test_chained_dedup_window_agg_matches_batch(spark, sf_dir):

@@ -17,6 +17,9 @@ import json
 import re
 import subprocess
 import sys
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parents[1]
 
 # public hosts that legitimately appear in docs/docstrings (papers,
 # Spark docs, the public reference repo)
@@ -75,7 +78,7 @@ PATTERNS = {
 def main() -> None:
     rnd = int(sys.argv[1]) if len(sys.argv) > 1 else 13
     files = subprocess.run(
-        ["git", "ls-files"], capture_output=True, text=True, cwd="/root/repo"
+        ["git", "ls-files"], capture_output=True, text=True, cwd=REPO
     ).stdout.splitlines()
     hits: dict[str, list[str]] = {k: [] for k in PATTERNS}
     for f in files:
@@ -86,7 +89,7 @@ def main() -> None:
             # not engine source; the engine gate is the shipped code
             continue
         try:
-            src = open(f"/root/repo/{f}", encoding="utf-8", errors="ignore").read()
+            src = open(REPO / f, encoding="utf-8", errors="ignore").read()
         except OSError:
             continue
         for cat, pat in PATTERNS.items():
@@ -95,7 +98,7 @@ def main() -> None:
                 hits[cat].append(f"{f}:{line}: {m.group(0)[:80]}")
     n = sum(len(v) for v in hits.values())
     out = {"round": rnd, "n_hits": n, "hits": hits}
-    json.dump(out, open("/root/repo/LEAKCHECK.json", "w"), indent=2)
+    json.dump(out, open(REPO / "LEAKCHECK.json", "w"), indent=2)
     print(json.dumps({"round": rnd, "n_hits": n}))
     for cat, v in hits.items():
         for h in v:
