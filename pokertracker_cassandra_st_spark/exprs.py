@@ -52,7 +52,7 @@ def slong(col: str | Column, scale: int) -> Column:
     object-backed wide-decimal accumulator) and stays order
     independent. Use when the value domain bounds the sum well inside
     int64 (document the bound at the call site); the DECIMAL helpers
-    below are the unbounded fallback.
+    above are the unbounded fallback.
     """
     c = F.col(col) if isinstance(col, str) else col
     # signum * floor(|x|+0.5), not round(): Spark's round on double goes
@@ -66,54 +66,7 @@ def slong(col: str | Column, scale: int) -> Column:
     )
 
 
-def o_slong(expr: str, scale: int) -> str:
-    """DuckDB fragment mirroring :func:`slong`."""
-    return f"CAST(round(({expr}) * {10**scale}) AS BIGINT)"
-
-
 MONEY = "decimal(12,2)"  # raw money-like columns are exact 2-decimal values
-RATE = "decimal(6,4)"  # discount/tax-like rates
-
-
-def money(col: str | Column) -> Column:
-    """Tie-free cast of a 2-decimal double column to exact decimal."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast(MONEY)
-
-
-def rate(col: str | Column) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast(RATE)
-
-
-def dsum_exact(dec_col: Column) -> Column:
-    """SUM of an already-exact decimal expression -> rounded double.
-
-    The sum is exact decimal (order independent); rounding to 4 places
-    before the double cast keeps the value within 15 significant digits
-    so the decimal->double conversion is correctly rounded everywhere.
-    """
-    return F.round(F.sum(dec_col), 4).cast("double")
-
-
-def davg_exact(dec_col: Column) -> Column:
-    return F.round(F.sum(dec_col), 4).cast("double") / F.count(dec_col)
-
-
-def o_money(expr: str) -> str:
-    return f"CAST(({expr}) AS DECIMAL(12,2))"
-
-
-def o_rate(expr: str) -> str:
-    return f"CAST(({expr}) AS DECIMAL(6,4))"
-
-
-def o_dsum_exact(dec_expr: str) -> str:
-    return f"CAST(ROUND(SUM({dec_expr}), 4) AS DOUBLE)"
-
-
-def o_davg_exact(dec_expr: str) -> str:
-    return f"CAST(ROUND(SUM({dec_expr}), 4) AS DOUBLE) / COUNT({dec_expr})"
 
 
 def fmt_ts(col: str | Column) -> Column:

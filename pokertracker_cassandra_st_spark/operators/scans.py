@@ -20,7 +20,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pokertracker_cassandra_st_spark.catalog import SCRATCH, scratch_dir, table
+from pokertracker_cassandra_st_spark.catalog import scratch_dir, table
 from pokertracker_cassandra_st_spark.registry import register
 
 
@@ -84,7 +84,6 @@ def q_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream reader; writer tasks stream to the sink without any
     driver collection.
     """
-    os.makedirs(SCRATCH, exist_ok=True)
     out = scratch_dir(sf_dir, "sink_roundtrip")  # overwrite mode reclaims it
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"
@@ -132,7 +131,6 @@ def q_sink_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     to one directory per task output; no shuffle beyond the write's
     own distribution.
     """
-    os.makedirs(SCRATCH, exist_ok=True)
     out = scratch_dir(sf_dir, "sink_partition_overwrite")
     cols = ["o_orderkey", "o_totalprice", "o_orderpriority"]
     o = table(spark, sf_dir, "orders").select(*cols)
@@ -201,7 +199,6 @@ def q_sink_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     mechanism); the full-table rewrite here is the worst case, not the
     design.
     """
-    os.makedirs(SCRATCH, exist_ok=True)
     base_dir = scratch_dir(sf_dir, "merge_base")
     out_dir = scratch_dir(sf_dir, "merge_out")
     key = F.col("o_orderkey")
@@ -276,7 +273,6 @@ def q_scan_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension is distinct-priority-level tiny and broadcast; no
     shuffle on the fact side before aggregation's own exchange.
     """
-    os.makedirs(SCRATCH, exist_ok=True)
     out = scratch_dir(sf_dir, "dpp_orders")
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
@@ -333,7 +329,6 @@ def q_sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     fewer, larger row groups => fewer scan tasks, better columnar
     compression, pushdown over healthy-size footers.
     """
-    os.makedirs(SCRATCH, exist_ok=True)
     frag = scratch_dir(sf_dir, "sink_compaction_frag")
     compact = scratch_dir(sf_dir, "sink_compaction_out")
     ev = table(spark, sf_dir, "events")
@@ -415,7 +410,6 @@ def q_scan_manifest_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     the row-group min/max skipping parquet already does inside each
     opened file.
     """
-    os.makedirs(SCRATCH, exist_ok=True)
     out = scratch_dir(sf_dir, "manifest_prune")
     src = table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_orderdate").cast("date").alias("o_date"),
@@ -427,18 +421,9 @@ def q_scan_manifest_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(out)
     )
-    manifest = (
-        spark.read.parquet(out)
-        .groupBy(F.input_file_name().alias("file"))
-        .agg(F.min("o_date").alias("mn"), F.max("o_date").alias("mx"))
-    )
     lo, hi = _MANIFEST_LO.split("'")[1], _MANIFEST_HI.split("'")[1]
-    kept = [
-        r["file"]
-        for r in manifest.filter(
-            ~((F.col("mx") < F.lit(lo)) | (F.col("mn") > F.lit(hi)))
-        ).collect()  # planner-side manifest, file-count-bounded (8 rows)
-    ]
+    # planner-side manifest, file-count-bounded (8 rows)
+    kept = [r["file"] for r in _manifest_frame(spark, sf_dir).filter("kept").collect()]
     back = spark.read.parquet(*kept).filter(
         F.col("o_date").between(F.lit(lo), F.lit(hi))
     )
@@ -452,9 +437,10 @@ def q_scan_manifest_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _manifest_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The manifest over the layout the query just planned (test hook:
-    tests/test_plans.py counts total vs range-intersecting files to
-    assert the skipping is real)."""
+    """Per-file (min, max) manifest of the clustered layout, with
+    ``kept`` = the file's range intersects the query range. The query
+    reads the kept files; tests/test_plans.py counts total vs kept files
+    to assert the skipping is real."""
     out = scratch_dir(sf_dir, "manifest_prune")
     lo, hi = _MANIFEST_LO.split("'")[1], _MANIFEST_HI.split("'")[1]
     return (

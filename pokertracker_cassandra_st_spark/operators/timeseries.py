@@ -16,12 +16,10 @@ span.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pokertracker_cassandra_st_spark.catalog import SCRATCH, table
+from pokertracker_cassandra_st_spark.catalog import scratch_dir, table
 from pokertracker_cassandra_st_spark.exprs import DEC, MONEY, fmt_ts
 from pokertracker_cassandra_st_spark.registry import register
 
@@ -316,8 +314,7 @@ def q_ts_rollup_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollups rely on. The refresh path is incremental: re-aggregate only
     the hours a new partition touches, overwrite those rows.
     """
-    os.makedirs(SCRATCH, exist_ok=True)
-    mat = f"{SCRATCH}/rollup_hourly_{os.path.basename(os.path.normpath(sf_dir))}"
+    mat = scratch_dir(sf_dir, "rollup_hourly")
     ev = table(spark, sf_dir, "events")
     (
         ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("h"))

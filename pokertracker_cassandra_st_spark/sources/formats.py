@@ -19,7 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pokertracker_cassandra_st_spark.catalog import SCRATCH, scratch_dir, table
+from pokertracker_cassandra_st_spark.catalog import scratch_dir, table
 from pokertracker_cassandra_st_spark.exprs import dsum, o_dsum
 from pokertracker_cassandra_st_spark.registry import register
 
@@ -37,7 +37,6 @@ _READ_SCHEMA = "o_orderkey long, o_custkey long, o_orderstatus string, o_totalpr
 
 
 def _roundtrip(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
-    os.makedirs(SCRATCH, exist_ok=True)
     # fixed per-format dir: overwrite mode reclaims it every run
     out = scratch_dir(sf_dir, f"roundtrip_{fmt}")
     src = table(spark, sf_dir, "orders").select(*_PROJ_COLS)
@@ -161,7 +160,6 @@ def q_source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet resolves columns by name. Batch dirs stay independently
     written — no rewrite of old data to evolve.
     """
-    os.makedirs(SCRATCH, exist_ok=True)
     out = scratch_dir(sf_dir, "schema_evo")
     o = table(spark, sf_dir, "orders")
     key = F.col("o_orderkey")
@@ -198,7 +196,6 @@ def q_source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams executor->sink with no driver involvement, and the
     explicit read schema avoids the double-scan of schema inference.
     """
-    os.makedirs(SCRATCH, exist_ok=True)
     out = scratch_dir(sf_dir, "roundtrip_xml")
     src = table(spark, sf_dir, "orders").select(*_PROJ_COLS)
     src.write.mode("overwrite").format("xml").option("rowTag", "order").save(out)
@@ -243,7 +240,6 @@ def q_source_text_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     text on write and summed as DECIMAL after re-cast, so the
     aggregate matches the parquet original bit-for-bit.
     """
-    os.makedirs(SCRATCH, exist_ok=True)
     out = scratch_dir(sf_dir, "text_log")
     ev = table(spark, sf_dir, "events")
     line = F.concat(
@@ -315,7 +311,6 @@ def q_source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop over 40 tiny files — it BUILDS the external-world input, it
     is not part of the measured query plan.
     """
-    os.makedirs(SCRATCH, exist_ok=True)
     out = scratch_dir(sf_dir, "binary_blob")
     docs = (
         table(spark, sf_dir, "documents")
@@ -375,7 +370,6 @@ def q_source_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     interchange-not-storage point) — at 100 TB this query IS the
     quarantine step that moves a feed into parquet.
     """
-    os.makedirs(SCRATCH, exist_ok=True)
     out = scratch_dir(sf_dir, "csv_malformed")
     src = table(spark, sf_dir, "orders").select(*_PROJ_COLS)
     price_s = F.col("o_totalprice").cast("decimal(12,2)").cast("string")
@@ -455,7 +449,6 @@ def q_source_jsonl_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combine still bounds the shuffle by (segment x tag)
     cardinality. At 100 TB the only change is file count.
     """
-    os.makedirs(SCRATCH, exist_ok=True)
     out = scratch_dir(sf_dir, "roundtrip_jsonl_nested")
     ev = table(spark, sf_dir, "events")
     tags = F.array_compact(

@@ -4,7 +4,10 @@ The reference's query service consumes the Kafka stream and keeps its
 read model current (``start_container.sh:95``). The memory-sink
 pipelines in stream_queries.py prove semantics; THIS module is the
 deployment shape: each micro-batch folds its slice and merges it into
-the parquet-backed materialized view via plans/mv.py.
+the parquet-backed materialized view via plans/mv.py. The event stream
+and the run to completion (checkpoint, trigger, cleanup) are
+runner.py's ``stream_events`` and ``run_foreach_batch``; this module is
+only the merge.
 
 Exactly-once without sink transactions: the merge is IDEMPOTENT
 (last-write-wins by the monotonic event_id), so a replayed micro-batch
@@ -21,8 +24,6 @@ restarts stateless.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from pokertracker_cassandra_st_spark.plans.mv import full_refresh, incremental_update
@@ -34,7 +35,6 @@ def run_streaming_mv(
 ) -> DataFrame:
     """Stream the event log into an incrementally-maintained MV;
     returns the final MV DataFrame."""
-    os.makedirs(runner.SCRATCH, exist_ok=True)
     ev = runner.stream_events(spark, sf_dir, n_files=n_files)
     # seed an empty MV so every batch takes the incremental path
     full_refresh(ev.sparkSession.createDataFrame([], ev.schema), mv_path)
@@ -42,20 +42,5 @@ def run_streaming_mv(
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         incremental_update(spark, mv_path, batch_df)
 
-    ckpt = f"{mv_path}_ckpt"
-    try:
-        q = (
-            ev.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        # the checkpoint only matters while the query runs (the MV holds
-        # the durable state); drop it so repeated runs don't accumulate
-        # state dirs under scratch — mirrors runner.run_to_table
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
+    runner.run_foreach_batch(ev, merge_batch)
     return spark.read.parquet(mv_path)

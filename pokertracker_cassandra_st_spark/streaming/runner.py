@@ -1,11 +1,18 @@
-"""Streaming harness: file-source micro-batch -> memory sink, run to
-completion synchronously.
+"""Streaming harness: the micro-batch fixture and the one run loop.
 
 Mirrors the reference topology (Kafka topic -> query-service consumer,
-``start_container.sh:56,95``): the parquet event file plays the topic,
-the memory sink plays the read model. In production the same pipeline
-binds ``readStream.format("kafka")`` and a real sink — only the
-source/sink lines change, the transformations are identical.
+``start_container.sh:56,95``): a table split into time-ordered chunk
+files plays the topic, one chunk per micro-batch, and a memory sink or
+a foreachBatch function plays the read model. In production the same
+pipeline binds ``readStream.format("kafka")`` and a real sink — only
+the source/sink lines change, the transformations are identical.
+
+This module owns every decision about that fixture and about running a
+stream: the chunk layout (one file per bucket, fed in mtime order,
+``_SUCCESS`` marker; ``_write_chunks``), the reader (``_read_chunks``),
+and run-to-completion (``_run``: throwaway checkpoint, ``availableNow``,
+the state-partition pin, cleanup) behind ``run_to_table`` and
+``run_foreach_batch``.
 
 Scale notes: state (dedup keys, session windows, fold state) lives in
 the executor state store partitioned by key — the same shuffle-on-key
@@ -16,17 +23,42 @@ backfill, the same code path a catch-up replay uses in production.
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 import tempfile
+import time
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from pokertracker_cassandra_st_spark import catalog
+from pokertracker_cassandra_st_spark.catalog import (
+    events_ts_tz_adjusted,
+    events_ts_unit,
+    normalize_events_ts,
+)
 
 # Read at call time, so a process may point the stream state elsewhere.
 SCRATCH = catalog.SCRATCH
+
+# Shuffle (= state) partitions of every stream this module runs. Every
+# state partition pays per-batch checkpoint/commit overhead, so the
+# count is sized to STATE VOLUME, not to cores; a streaming query's
+# state partitioning is fixed at its first checkpoint anyway. Measured,
+# not guessed (round-7 probe, sf0.1, local[32], best-of-2): for the
+# JVM-stateful 8-micro-batch queries the per-partition commit cost
+# dominates and 32 partitions nearly DOUBLES wall time
+# (q_stream_chained 3.7 s -> 6.7 s, q_stream_latedata 3.7 s -> 6.6 s).
+# A deployment holding millions of keys would raise it to hundreds.
+STATE_PARTITIONS = 8
+
+DOCS_RAW_SCHEMA = (
+    "doc_id long, text string, lang string, source string, n_chars long"
+)
 
 
 def events_raw_schema(sf_dir: str) -> str:
@@ -36,11 +68,6 @@ def events_raw_schema(sf_dir: str) -> str:
     or NTZ (-> ``timestamp_ntz``), probed from the footer so a driver
     regeneration flipping tz-adjustedness can neither fail the stream
     nor shift instants (see catalog.events_ts_unit / _tz_adjusted)."""
-    from pokertracker_cassandra_st_spark.catalog import (
-        events_ts_tz_adjusted,
-        events_ts_unit,
-    )
-
     if events_ts_unit(sf_dir) == "ns":
         ts_t = "long"
     else:
@@ -51,10 +78,73 @@ def events_raw_schema(sf_dir: str) -> str:
     )
 
 
-# Back-compat alias for the legacy nanos layout (tests import this name).
-EVENTS_RAW_SCHEMA = (
-    "event_id long, ts long, user_id long, event_type string, value double, props string"
-)
+def _write_chunks(tagged: DataFrame, out: str, n_files: int, order: str) -> None:
+    """Write ``tagged`` as ``out/chunk_000..`` — one parquet file per
+    value of its ``_b`` bucket column (0..n_files-1), rows in ``order``
+    within each file — mtime-stamped in chunk order, then mark ``out``
+    complete with ``_SUCCESS``.
+
+    ONE job: hash-repartition on _b puts each bucket value wholly inside
+    one task (hash of a value is deterministic — collisions merge tasks,
+    never split a bucket), and the dynamic-partition write emits one
+    file per partition value per task => exactly one file per bucket,
+    asserted below. (repartitionByRange over a column with only n_files
+    distinct values derives boundaries by SAMPLING, so two buckets could
+    silently coalesce into one file.) The explicit sortWithinPartitions
+    pre-satisfies the writer's partition-column sort requirement, so
+    rows land in each file in ``order`` with no extra writer-side sort.
+    """
+    shutil.rmtree(out, ignore_errors=True)
+    tmp = f"{out}/_tmp"
+    (
+        tagged.repartition(n_files, "_b")
+        .sortWithinPartitions("_b", order)
+        .write.mode("overwrite")
+        .partitionBy("_b")
+        .parquet(tmp)
+    )
+    for i in range(n_files):
+        parts = glob.glob(f"{tmp}/_b={i}/part-*.parquet")
+        if len(parts) != 1:
+            raise RuntimeError(
+                f"split bucket {i} of {n_files} produced {len(parts)} files "
+                f"(empty bucket?) — micro-batch structure would be broken"
+            )
+        shutil.move(parts[0], f"{out}/chunk_{i:03d}.parquet")
+    shutil.rmtree(tmp)
+    # The file stream source feeds files in modification-time order;
+    # stamp mtimes to match chunk (= arrival) order.
+    t0 = time.time()
+    for i in range(n_files):
+        os.utime(f"{out}/chunk_{i:03d}.parquet", (t0 + i + 1, t0 + i + 1))
+    with open(f"{out}/_SUCCESS", "w"):
+        pass
+
+
+def _read_chunks(spark: SparkSession, schema: str, src: str) -> DataFrame:
+    """The chunk directory ``src`` as a file-source stream: one chunk
+    per micro-batch (maxFilesPerTrigger=1), in mtime = chunk order."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .format("parquet")
+        .load(src)
+    )
+
+
+def _id_buckets(df: DataFrame, id_col: str, n: int) -> DataFrame:
+    """``df`` plus ``_b`` = its contiguous ``id_col`` range, 0..n-1. The
+    max id enters via a broadcast 1-row frame, so the split stays one
+    job (no separate driver-side max() scan)."""
+    mx = df.agg(F.max(id_col).alias("_mx"))
+    return (
+        df.crossJoin(F.broadcast(mx))
+        .withColumn(
+            "_b",
+            F.least(F.floor(F.col(id_col) * n / (F.col("_mx") + 1)), F.lit(n - 1)),
+        )
+        .drop("_mx")
+    )
 
 
 def stream_events(
@@ -63,153 +153,131 @@ def stream_events(
     """events as a file-source stream (ts rebuilt to µs timestamp).
 
     ``n_files > 1`` splits the log into that many time-ordered chunks
-    and feeds them one per micro-batch (maxFilesPerTrigger=1) — this is
-    how the late-data/watermark semantics are exercised
-    deterministically.
+    and feeds them one per micro-batch — this is how the
+    late-data/watermark semantics are exercised deterministically.
 
     ``shuffled=True`` hash-partitions instead: each micro-batch carries
     events from across the whole time range, so later batches deliver
     events OLDER than ones already seen — deterministic out-of-order
     arrival, for asserting that order-insensitive folds still converge.
     """
-    from pokertracker_cassandra_st_spark.catalog import (
-        events_ts_unit,
-        normalize_events_ts,
-    )
-
-    if events_ts_unit(sf_dir) == "ns":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # The file streaming source requires a directory; materialize the
-    # event log as n time-ordered files under scratch (cached per sf/n).
     src = _split_events(spark, sf_dir, n_files, shuffled)
-    reader = (
-        spark.readStream.schema(events_raw_schema(sf_dir))
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-    )
-    return normalize_events_ts(reader.load(src))
+    return normalize_events_ts(_read_chunks(spark, events_raw_schema(sf_dir), src))
 
 
 def _split_events(
     spark: SparkSession, sf_dir: str, n_files: int, shuffled: bool = False
 ) -> str:
-    """Materialize events as n files (cached per sf/n/mode): contiguous
-    time-ordered ranges by default, hash-scattered when ``shuffled``."""
-    from pokertracker_cassandra_st_spark.catalog import events_ts_unit
-
+    """Materialize events as n chunk files (cached per sf/n/mode/ts
+    unit): contiguous event_id (~ arrival) ranges by default,
+    hash-scattered when ``shuffled``."""
     unit = events_ts_unit(sf_dir)
+    if unit == "ns":
+        # both the split's batch read and the stream's read take the raw
+        # int64 nanos (events_raw_schema)
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     mode = "shuf" if shuffled else "ord"
     key = f"{os.path.basename(os.path.normpath(sf_dir))}_{n_files}_{mode}_{unit}"
-    # v2: exact per-bucket files (repartitionByRange over a column with
-    # only n_files distinct values derives boundaries by SAMPLING, so
-    # two buckets could silently coalesce into one file — fewer
-    # micro-batches than the out-of-order coverage claims)
-    # v3: cache key carries the on-disk ts unit so a driver testdata
-    # regeneration (ns -> us layout) invalidates stale splits.
+    # v3: the cache key carries the on-disk ts unit, so test data
+    # regenerated in the other layout (ns <-> us) invalidates stale splits.
     out = f"{SCRATCH}/events_split_v3_{key}"
-    marker = f"{out}/_SUCCESS"
-    if not os.path.exists(marker):
-        if unit == "ns":
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        import glob
-        import shutil
-        import time
-
+    if not os.path.exists(f"{out}/_SUCCESS"):
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
         if shuffled:
             # deterministic hash scatter: consecutive event_ids land in
             # different chunks, so every chunk spans the full time range
-            bucket = F.pmod(F.xxhash64("event_id"), F.lit(n_files))
-        else:
-            # contiguous id ranges: event_id order ~ arrival order; the
-            # max enters via a broadcast 1-row frame so the split stays
-            # one job (no separate driver-side max() scan)
-            mx = ev.agg(F.max("event_id").alias("_mx"))
-            ev = ev.crossJoin(F.broadcast(mx))
-            bucket = F.least(
-                F.floor(F.col("event_id") * n_files / (F.col("_mx") + 1)),
-                F.lit(n_files - 1),
+            tagged = ev.withColumn(
+                "_b", F.pmod(F.xxhash64("event_id"), F.lit(n_files))
             )
-        tagged = ev.withColumn("_b", bucket).drop("_mx")
-        shutil.rmtree(out, ignore_errors=True)
-        os.makedirs(out)
-        # ONE job: hash-repartition on _b puts each bucket value wholly
-        # inside one task (hash of a value is deterministic — collisions
-        # merge tasks, never split a bucket), and the dynamic-partition
-        # write emits one file per partition value per task => exactly
-        # one file per bucket, asserted below. The explicit
-        # sortWithinPartitions(_b, event_id) pre-satisfies the writer's
-        # partition-column sort requirement, so rows land in each file
-        # in event_id order with no extra writer-side sort.
-        tmp = f"{out}/_tmp"
-        (
-            tagged.repartition(n_files, "_b")
-            .sortWithinPartitions("_b", "event_id")
-            .write.mode("overwrite")
-            .partitionBy("_b")
-            .parquet(tmp)
-        )
-        for i in range(n_files):
-            parts = glob.glob(f"{tmp}/_b={i}/part-*.parquet")
-            if len(parts) != 1:
-                raise RuntimeError(
-                    f"split bucket {i} of {n_files} produced {len(parts)} files "
-                    f"(empty bucket?) — micro-batch structure would be broken"
-                )
-            shutil.move(parts[0], f"{out}/chunk_{i:03d}.parquet")
-        shutil.rmtree(tmp)
-        # The file stream source feeds files in modification-time order;
-        # stamp mtimes to match chunk (= arrival) order.
-        t0 = time.time()
-        for i in range(n_files):
-            os.utime(f"{out}/chunk_{i:03d}.parquet", (t0 + i + 1, t0 + i + 1))
-        with open(marker, "w"):
-            pass
+        else:
+            tagged = _id_buckets(ev, "event_id", n_files)
+        _write_chunks(tagged, out, n_files, "event_id")
     return out
+
+
+def stream_documents(
+    spark: SparkSession, sf_dir: str, n_files: int = 4, augment: bool = False
+) -> DataFrame:
+    """documents as a file-source stream, one id-ordered chunk per
+    micro-batch."""
+    src = _split_documents(spark, sf_dir, n_files, augment)
+    return _read_chunks(spark, DOCS_RAW_SCHEMA, src)
+
+
+def _split_documents(
+    spark: SparkSession, sf_dir: str, n_files: int, augment: bool = False
+) -> str:
+    """Materialize documents as n doc_id-contiguous chunk files (cached
+    per sf/n/mode) — the documents twin of ``_split_events``'s ordered
+    mode.
+
+    ``augment=True`` (n_files=4) streams the corpus PLUS a perturbed
+    copy of every >=2-token document (id + 1000000, last token
+    dropped — q_dedup_incremental's shard device, llm/dedup.py):
+    originals arrive in batches 0-1 by doc_id half, their perturbed
+    near-duplicates in batches 2-3 — so every later batch carries
+    planted near-dups of EARLIER batches and the cross-batch match set
+    is deterministic and non-empty at every sf."""
+    mode = "aug" if augment else "ord"
+    key = f"{os.path.basename(os.path.normpath(sf_dir))}_{n_files}_{mode}"
+    out = f"{SCRATCH}/docs_split_v1_{key}"
+    if not os.path.exists(f"{out}/_SUCCESS"):
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        if augment:
+            if n_files != 4:
+                raise ValueError("augmented split is a 4-batch fixture")
+            orig = _id_buckets(docs, "doc_id", 2)
+            t = F.split("text", " ")
+            pert = orig.filter(F.size(t) >= 2).select(
+                (F.col("doc_id") + 1000000).alias("doc_id"),
+                F.array_join(F.slice(t, 1, F.size(t) - 1), " ").alias("text"),
+                "lang", "source", "n_chars",
+                (F.col("_b") + 2).alias("_b"),
+            )
+            tagged = orig.unionByName(pert)
+        else:
+            tagged = _id_buckets(docs, "doc_id", n_files)
+        _write_chunks(tagged, out, n_files, "doc_id")
+    return out
+
+
+def _run(stream_df: DataFrame, sink: Callable[[DataStreamWriter], DataStreamWriter]) -> None:
+    """Run ``stream_df`` to completion through ``sink(writeStream)``: a
+    throwaway checkpoint under SCRATCH, an ``availableNow`` trigger, the
+    shuffle partitions pinned to STATE_PARTITIONS while the query runs
+    (the query's session clone reads them at start; a foreachBatch
+    function's own jobs run while the pin holds), then everything
+    restored and the checkpoint deleted — a finished query's state is
+    in its sink, and scratch must not grow run after run."""
+    spark = stream_df.sparkSession
+    os.makedirs(SCRATCH, exist_ok=True)
+    ckpt = tempfile.mkdtemp(prefix="ckpt_", dir=SCRATCH)
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+    try:
+        (
+            sink(stream_df.writeStream)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def run_to_table(stream_df: DataFrame, output_mode: str) -> DataFrame:
     """Run a streaming DataFrame to completion into a memory sink and
-    return the sink table as a batch DataFrame.
-
-    The stateful-partition count is pinned while the query starts:
-    every state partition pays per-batch checkpoint/commit overhead, so
-    it must be sized to STATE VOLUME, not to cores. A streaming query's
-    state partitioning is fixed at its first checkpoint anyway —
-    choosing it explicitly per deployment is the production posture;
-    override with SPARK_GRAFT_STREAM_PARTITIONS (e.g. hundreds on a
-    real cluster holding millions of keys). The 8 default is measured,
-    not guessed (round-7 probe, sf0.1, local[32], best-of-2): for the
-    JVM-stateful 8-micro-batch queries the per-partition commit cost
-    dominates and 32 partitions nearly DOUBLES wall time
-    (q_stream_chained 3.7 s -> 6.7 s, q_stream_latedata 3.7 s ->
-    6.6 s) — so 8 is the right trade at this state volume.
-    """
-    spark = stream_df.sparkSession
+    return the sink table as a batch DataFrame."""
     name = f"sink_{uuid.uuid4().hex[:12]}"
-    os.makedirs(SCRATCH, exist_ok=True)
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_", dir=SCRATCH)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"),
-    )
-    try:
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        # the memory sink holds results in memory; the checkpoint is
-        # only needed while the query runs — don't let scratch grow
-        # unboundedly across rounds
-        import shutil
+    _run(stream_df, lambda w: w.outputMode(output_mode).format("memory").queryName(name))
+    return stream_df.sparkSession.table(name)
 
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+
+def run_foreach_batch(
+    stream_df: DataFrame, fn: Callable[[DataFrame, int], None]
+) -> None:
+    """Run a streaming DataFrame to completion, calling ``fn(batch_df,
+    epoch_id)`` on every micro-batch."""
+    _run(stream_df, lambda w: w.foreachBatch(fn))

@@ -9,10 +9,14 @@ pairs are the full-corpus operators' job, exactly like
 ``q_dedup_incremental``'s shard-vs-shard exclusion, llm/dedup.py).
 
 Exactly-once without sink transactions: both the match append and the
-index append are keyed by the batch's doc_id range, so a replayed
+index append are keyed by the batch's epoch id, so a replayed
 micro-batch after a crash overwrites its own partition directory
 (idempotent dynamic-partition overwrite) rather than duplicating rows —
 the same idempotence-upgrades-at-least-once pattern as mv_sink.py.
+The document stream (``runner.stream_documents``: the corpus split into
+id-ordered chunks plus planted near-duplicates) and the run to
+completion (``runner.run_foreach_batch``) are runner.py's; this module
+is only the matcher.
 
 Scale notes: the stored index is (shingle, doc_id) pairs plus a
 per-doc shingle count — the inverted index a production dedup service
@@ -29,106 +33,12 @@ shingle and the shingle join enumerates them all).
 
 from __future__ import annotations
 
-import glob
-import os
 import shutil
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pokertracker_cassandra_st_spark.streaming import runner
-
-DOCS_RAW_SCHEMA = (
-    "doc_id long, text string, lang string, source string, n_chars long"
-)
-
-
-def _split_documents(
-    spark: SparkSession, sf_dir: str, n_files: int, augment: bool = False
-) -> str:
-    """Materialize documents as n doc_id-contiguous files (cached per
-    sf/n/mode), mtime-stamped so the file stream feeds them in id order
-    — the documents twin of runner._split_events's ordered mode.
-
-    ``augment=True`` (n_files=4) streams the corpus PLUS a perturbed
-    copy of every >=2-token document (id + 1000000, last token
-    dropped — q_dedup_incremental's shard device, llm/dedup.py):
-    originals arrive in batches 0-1 by doc_id half, their perturbed
-    near-duplicates in batches 2-3 — so every later batch carries
-    planted near-dups of EARLIER batches and the cross-batch match set
-    is deterministic and non-empty at every sf."""
-    mode = "aug" if augment else "ord"
-    key = f"{os.path.basename(os.path.normpath(sf_dir))}_{n_files}_{mode}"
-    out = f"{runner.SCRATCH}/docs_split_v1_{key}"
-    marker = f"{out}/_SUCCESS"
-    if not os.path.exists(marker):
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        mx = docs.agg(F.max("doc_id").alias("_mx"))
-        docs = docs.crossJoin(F.broadcast(mx))
-        if augment:
-            if n_files != 4:
-                raise ValueError("augmented split is a 4-batch fixture")
-            t = F.split("text", " ")
-            half = F.least(
-                F.floor(F.col("doc_id") * 2 / (F.col("_mx") + 1)), F.lit(1)
-            )
-            orig = docs.select(
-                "doc_id", "text", "lang", "source", "n_chars",
-                half.alias("_b"),
-            )
-            pert = docs.filter(F.size(t) >= 2).select(
-                (F.col("doc_id") + 1000000).alias("doc_id"),
-                F.array_join(F.slice(t, 1, F.size(t) - 1), " ").alias("text"),
-                "lang", "source", "n_chars",
-                (half + 2).alias("_b"),
-            )
-            tagged = orig.unionByName(pert)
-        else:
-            bucket = F.least(
-                F.floor(F.col("doc_id") * n_files / (F.col("_mx") + 1)),
-                F.lit(n_files - 1),
-            )
-            tagged = docs.withColumn("_b", bucket).drop("_mx")
-        shutil.rmtree(out, ignore_errors=True)
-        os.makedirs(out)
-        tmp = f"{out}/_tmp"
-        (
-            tagged.repartition(n_files, "_b")
-            .sortWithinPartitions("_b", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("_b")
-            .parquet(tmp)
-        )
-        for i in range(n_files):
-            parts = glob.glob(f"{tmp}/_b={i}/part-*.parquet")
-            if len(parts) != 1:
-                raise RuntimeError(
-                    f"doc split bucket {i}/{n_files} produced {len(parts)} "
-                    "files — micro-batch structure would be broken"
-                )
-            shutil.move(parts[0], f"{out}/chunk_{i:03d}.parquet")
-        shutil.rmtree(tmp)
-        t0 = time.time()
-        for i in range(n_files):
-            os.utime(f"{out}/chunk_{i:03d}.parquet", (t0 + i + 1, t0 + i + 1))
-        with open(marker, "w"):
-            pass
-    return out
-
-
-def stream_documents(
-    spark: SparkSession, sf_dir: str, n_files: int = 4, augment: bool = False
-) -> DataFrame:
-    """documents as a file-source stream, one id-ordered chunk per
-    micro-batch (maxFilesPerTrigger=1)."""
-    src = _split_documents(spark, sf_dir, n_files, augment)
-    return (
-        spark.readStream.schema(DOCS_RAW_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(src)
-    )
 
 
 def _shingled(docs: DataFrame) -> DataFrame:
@@ -162,11 +72,9 @@ def run_stream_dedup_near(
 ) -> DataFrame:
     """Stream documents through a foreachBatch near-dup matcher; returns
     the accumulated (id_a=prior, id_b=new, jaccard) matches."""
-    os.makedirs(runner.SCRATCH, exist_ok=True)
     idx_sh = f"{work_path}/index_shingles"
     idx_n = f"{work_path}/index_counts"
     matches = f"{work_path}/matches"
-    ckpt = f"{work_path}/_ckpt"
     shutil.rmtree(work_path, ignore_errors=True)
     empty_sh = spark.createDataFrame([], "doc_id long, sh string, part long")
     empty_n = spark.createDataFrame([], "doc_id long, n long, part long")
@@ -242,17 +150,10 @@ def run_stream_dedup_near(
                 .parquet(path)
             )
 
-    ev = stream_documents(spark, sf_dir, n_files=n_files, augment=True)
-    try:
-        q = (
-            ev.writeStream.foreachBatch(match_and_index)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    runner.run_foreach_batch(
+        runner.stream_documents(spark, sf_dir, n_files=n_files, augment=True),
+        match_and_index,
+    )
     return (
         spark.read.schema("id_a long, id_b long, jaccard double, part long")
         .parquet(matches)

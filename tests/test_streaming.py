@@ -6,6 +6,8 @@
 2. Watermarks actually DROP late data when arrival is out of order.
 3. The stateful replay fold carries state across micro-batches, and
    runs as a JVM aggregate rather than a Python stateful worker.
+4. Every micro-batch fixture is one mtime-ordered chunk file per
+   bucket holding exactly its source rows.
 """
 
 from __future__ import annotations
@@ -16,9 +18,10 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from pokertracker_cassandra_st_spark.catalog import table
+from pokertracker_cassandra_st_spark.catalog import normalize_events_ts, table
 from pokertracker_cassandra_st_spark.registry import REGISTRY, get_queries
-from pokertracker_cassandra_st_spark.streaming.runner import SCRATCH, run_to_table
+from pokertracker_cassandra_st_spark.streaming import runner
+from pokertracker_cassandra_st_spark.streaming.runner import run_to_table
 
 get_queries()
 
@@ -55,44 +58,29 @@ def test_watermark_drops_late_events(spark, tmp_path):
     # batch1 triggers eviction/emission of window [0,15) with n=2;
     # batch2 delivers a row back at minute 5 -> state gone -> dropped.
     base = pd.Timestamp("2024-06-01 00:00:00")
-
-    def mk(ids_minutes):
-        return pd.DataFrame(
-            {
-                "event_id": [i for i, _ in ids_minutes],
-                "ts": [base + pd.Timedelta(minutes=m) for _, m in ids_minutes],
-                "user_id": [1] * len(ids_minutes),
-                "event_type": ["click"] * len(ids_minutes),
-                "value": [1.0] * len(ids_minutes),
-                "props": ["{}"] * len(ids_minutes),
-            }
-        )
-
-    d = str(tmp_path / "late_src")
-    os.makedirs(d)
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    chunks = [
-        mk([(0, 0), (1, 5), (2, 60)]),
-        mk([(3, 61)]),
-        mk([(4, 5)]),  # behind the watermark, window already evicted
+    arrivals = [
+        [(0, 0), (1, 5), (2, 60)],
+        [(3, 61)],
+        [(4, 5)],  # behind the watermark, window already evicted
     ]
-    for i, pdf in enumerate(chunks):
-        spark.createDataFrame(pdf, schema=schema).coalesce(1).write.parquet(
-            d + f"/f={i}"
-        )
-    # deterministic arrival order by mtime
-    import time
-
-    now = time.time()
-    for i in range(len(chunks)):
-        for f in os.listdir(d + f"/f={i}"):
-            if f.endswith(".parquet"):
-                os.utime(os.path.join(d, f"f={i}", f), (now + i * 10, now + i * 10))
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d + "/f=*")
+    rows = [(i, m, b) for b, chunk in enumerate(arrivals) for i, m in chunk]
+    pdf = pd.DataFrame(
+        {
+            "event_id": [i for i, _, _ in rows],
+            "ts": [base + pd.Timedelta(minutes=m) for _, m, _ in rows],
+            "user_id": 1,
+            "event_type": "click",
+            "value": 1.0,
+            "props": "{}",
+            "_b": [b for _, _, b in rows],
+        }
     )
+    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
+    d = str(tmp_path / "late_src")
+    runner._write_chunks(
+        spark.createDataFrame(pdf, schema=f"{schema}, _b int"), d, len(arrivals), "event_id"
+    )
+    src = runner._read_chunks(spark, schema, d)
     agg = (
         src.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "15 minutes"))
@@ -241,9 +229,7 @@ def test_checkpoint_recovery_resumes_exactly_once(spark, sf_dir, tmp_path):
     """
     import shutil
 
-    from pokertracker_cassandra_st_spark.streaming.runner import _split_events
-
-    src_all = _split_events(spark, sf_dir, n_files=8)
+    src_all = runner._split_events(spark, sf_dir, n_files=8)
     chunks = sorted(
         f for f in os.listdir(src_all) if f.startswith("chunk_")
     )
@@ -257,21 +243,8 @@ def test_checkpoint_recovery_resumes_exactly_once(spark, sf_dir, tmp_path):
     sink_dir = str(tmp_path / "sink")
 
     def run_once() -> None:
-        from pokertracker_cassandra_st_spark.catalog import (
-            events_ts_unit,
-            normalize_events_ts,
-        )
-        from pokertracker_cassandra_st_spark.streaming.runner import (
-            events_raw_schema,
-        )
-
-        if events_ts_unit(sf_dir) == "ns":
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         ev = normalize_events_ts(
-            spark.readStream.schema(events_raw_schema(sf_dir))
-            .option("maxFilesPerTrigger", 1)
-            .format("parquet")
-            .load(staged)
+            runner._read_chunks(spark, runner.events_raw_schema(sf_dir), staged)
         )
         agg = (
             ev.withWatermark("ts", "10 minutes")
@@ -379,9 +352,91 @@ def test_tws_replay_gate_is_loud(spark, sf_dir):
 def test_document_split_follows_runner_scratch(spark, sf_dir, tmp_path, monkeypatch):
     # a process that points runner.SCRATCH elsewhere gets its document
     # splits there, not in the scratch dir of import time
-    from pokertracker_cassandra_st_spark.streaming import runner, stream_dedup
-
     monkeypatch.setattr(runner, "SCRATCH", str(tmp_path))
-    out = stream_dedup._split_documents(spark, sf_dir, 2)
+    out = runner._split_documents(spark, sf_dir, 2)
     assert out.startswith(f"{tmp_path}/")
     assert os.path.exists(f"{out}/_SUCCESS")
+
+
+def _parquet_frame(path: str) -> pd.DataFrame:
+    """A parquet file as pandas, timestamps as their raw int64 (the
+    chunks keep the source's physical ts: µs timestamps, or the int64
+    nanos of the older layout)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(path)
+    fields = [
+        pa.field(f.name, pa.int64()) if pa.types.is_timestamp(f.type) else f
+        for f in t.schema
+    ]
+    return t.cast(pa.schema(fields)).to_pandas()
+
+
+@pytest.mark.parametrize(
+    "table_name,mode",
+    [
+        ("events", "ordered"),
+        ("events", "shuffled"),
+        ("documents", "ordered"),
+        ("documents", "augmented"),
+    ],
+)
+def test_split_is_one_mtime_ordered_chunk_per_bucket(
+    spark, sf_dir, tmp_path, monkeypatch, table_name, mode
+):
+    # Every micro-batch fixture: n chunk files, one per bucket, fed in
+    # chunk order (strictly increasing mtimes), holding exactly the
+    # source rows (plus, for the augmented documents, one perturbed
+    # copy of each multi-token document).
+    monkeypatch.setattr(runner, "SCRATCH", str(tmp_path))
+    n = 4
+    if table_name == "events":
+        key = "event_id"
+        out = runner._split_events(spark, sf_dir, n, shuffled=mode == "shuffled")
+    else:
+        key = "doc_id"
+        out = runner._split_documents(spark, sf_dir, n, augment=mode == "augmented")
+    files = sorted(f for f in os.listdir(out) if not f.startswith("_"))
+    assert files == [f"chunk_{i:03d}.parquet" for i in range(n)]
+    assert os.path.exists(f"{out}/_SUCCESS")
+    mtimes = [os.stat(f"{out}/{f}").st_mtime for f in files]
+    assert all(a < b for a, b in zip(mtimes, mtimes[1:])), mtimes
+    chunks = [_parquet_frame(f"{out}/{f}") for f in files]
+    ids = [c[key] for c in chunks]
+    assert all(len(i) > 0 for i in ids)
+
+    if mode == "shuffled":
+        # each chunk is one hash bucket, and later chunks deliver ids
+        # older than ones an earlier chunk already carried
+        for i, f in enumerate(files):
+            got = spark.read.parquet(f"{out}/{f}").select(
+                F.pmod(F.xxhash64(key), F.lit(n)).alias("b")
+            ).distinct().collect()
+            assert [r.b for r in got] == [i]
+        assert all(ids[i].min() < ids[i - 1].max() for i in range(1, n))
+    elif mode == "augmented":
+        # originals in chunks 0-1 by id half, their copies in 2-3
+        assert ids[0].max() < ids[1].min() and ids[1].max() < 1000000
+        assert ids[2].min() >= 1000000 and ids[2].max() < ids[3].min()
+        for orig, copy in ((0, 2), (1, 3)):
+            assert set(ids[copy] - 1000000) <= set(ids[orig])
+    else:
+        # contiguous id ranges in chunk order
+        assert all(ids[i - 1].max() < ids[i].min() for i in range(1, n))
+
+    src = _parquet_frame(f"{sf_dir}/{table_name}.parquet")
+    if mode == "augmented":
+        toks = src["text"].str.split(" ")
+        multi = toks.str.len() >= 2
+        copies = src[multi].assign(
+            doc_id=src.loc[multi, "doc_id"] + 1000000,
+            text=toks[multi].str[:-1].str.join(" "),
+        )
+        src = pd.concat([src, copies])
+    got = pd.concat(chunks)[list(src.columns)]
+    pd.testing.assert_frame_equal(
+        got.sort_values(key).reset_index(drop=True),
+        src.sort_values(key).reset_index(drop=True),
+        check_dtype=False,
+    )
