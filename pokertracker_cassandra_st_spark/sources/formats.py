@@ -322,7 +322,7 @@ def q_source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in docs:
         with open(f"{out}/blob_{r['doc_id']}.bin", "wb") as fh:
             fh.write(r["text"].encode("utf-8"))
-    raw = spark.read.format("binaryFile").load(f"{out}/*.bin")
+    raw = spark.read.format("binaryFile").option("pathGlobFilter", "*.bin").load(out)
     return raw.select(
         F.regexp_extract("path", r"([^/]+)$", 1).alias("file_name"),
         F.col("length").alias("byte_len"),

@@ -11,7 +11,7 @@ This module owns every decision about that fixture and about running a
 stream: the chunk layout (one file per bucket, fed in mtime order,
 ``_SUCCESS`` marker; ``_write_chunks``), the reader (``_read_chunks``),
 and run-to-completion (``_run``: throwaway checkpoint, ``availableNow``,
-the state-partition pin, cleanup) behind ``run_to_table`` and
+the one-wave state-partition pin, cleanup) behind ``run_to_table`` and
 ``run_foreach_batch``.
 
 Scale notes: state (dedup keys, session windows, fold state) lives in
@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
-from pokertracker_cassandra_st_spark import catalog
+from pokertracker_cassandra_st_spark import catalog, session
 from pokertracker_cassandra_st_spark.catalog import (
     events_ts_tz_adjusted,
     events_ts_unit,
@@ -45,15 +45,22 @@ from pokertracker_cassandra_st_spark.catalog import (
 # Read at call time, so a process may point the stream state elsewhere.
 SCRATCH = catalog.SCRATCH
 
-# Shuffle (= state) partitions of every stream this module runs. Every
-# state partition pays per-batch checkpoint/commit overhead, so the
-# count is sized to STATE VOLUME, not to cores; a streaming query's
-# state partitioning is fixed at its first checkpoint anyway. Measured,
-# not guessed (round-7 probe, sf0.1, local[32], best-of-2): for the
-# JVM-stateful 8-micro-batch queries the per-partition commit cost
-# dominates and 32 partitions nearly DOUBLES wall time
-# (q_stream_chained 3.7 s -> 6.7 s, q_stream_latedata 3.7 s -> 6.6 s).
-# A deployment holding millions of keys would raise it to hundreds.
+# Cap on the shuffle (= state) partitions of every stream this module
+# runs; ``_run`` takes the session's task slots up to this cap, so the
+# stateful stage of a micro-batch is one wave of tasks. The cost of a
+# state partition is per batch, not per row: each one writes a state
+# delta file and its checksum file (HDFSBackedStateStoreProvider
+# .finalizeDeltaFile), and JVM samples of the replay find most busy task
+# threads waiting in that close. On a 4-slot, 15 GB host, 8 partitions
+# ran the stateful stage in two waves; at 4, the first q_stream_replay
+# of a session (sf0.1, 4 micro-batches) went from 5.99 to 5.26 s (median
+# of 10 alternating runs each) and its median addBatch per micro-batch
+# from 617 to 445 ms, while 2 and 1 partitions gained little more. The
+# cap holds the round-7 probe (sf0.1, local[32], best-of-2): 32
+# partitions nearly DOUBLED wall time (q_stream_chained 3.7 s -> 6.7 s,
+# q_stream_latedata 3.7 s -> 6.6 s). Checkpoints are throwaway, so no
+# query restores state under another count. A deployment holding
+# millions of keys would raise the cap to hundreds.
 STATE_PARTITIONS = 8
 
 DOCS_RAW_SCHEMA = (
@@ -244,16 +251,19 @@ def _split_documents(
 def _run(stream_df: DataFrame, sink: Callable[[DataStreamWriter], DataStreamWriter]) -> None:
     """Run ``stream_df`` to completion through ``sink(writeStream)``: a
     throwaway checkpoint under SCRATCH, an ``availableNow`` trigger, the
-    shuffle partitions pinned to STATE_PARTITIONS while the query runs
-    (the query's session clone reads them at start; a foreachBatch
-    function's own jobs run while the pin holds), then everything
-    restored and the checkpoint deleted — a finished query's state is
-    in its sink, and scratch must not grow run after run."""
+    shuffle partitions pinned to one wave of the session's task slots,
+    at most STATE_PARTITIONS, while the query runs (the query's session
+    clone reads them at start; a foreachBatch function's own jobs run
+    while the pin holds), then everything restored and the checkpoint
+    deleted — a finished query's state is in its sink, and scratch must
+    not grow run after run."""
     spark = stream_df.sparkSession
     os.makedirs(SCRATCH, exist_ok=True)
     ckpt = tempfile.mkdtemp(prefix="ckpt_", dir=SCRATCH)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(min(STATE_PARTITIONS, session._parallelism(spark)))
+    )
     try:
         (
             sink(stream_df.writeStream)

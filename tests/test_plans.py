@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from pokertracker_cassandra_st_spark.catalog import scratch_dir
 from pokertracker_cassandra_st_spark.plans.inspect import explain_str
 from pokertracker_cassandra_st_spark.registry import REGISTRY, get_queries
 
@@ -915,10 +916,18 @@ def test_bpe_apply_is_broadcast_rewrite_chain(spark, sf_dir):
 def test_binaryfile_source_is_shuffle_free_map(spark, sf_dir):
     # blob dir -> (name, len, sha): parallel by file, pure projection,
     # no exchange of any kind
-    simple = plan_of(spark, "q_source_binaryfile", sf_dir, mode="simple")
+    df = REGISTRY["q_source_binaryfile"].fn(spark, sf_dir)
+    simple = explain_str(df, "simple")
     assert "binaryFile" in simple
     assert "Exchange" not in simple
     assert "Join" not in simple
+    # the scan lists the blob directory itself and filters names by
+    # pathGlobFilter, not a glob expanded to one root path per file
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    assert leaves.size() == 1
+    paths = leaves.apply(0).relation().location().rootPaths()
+    roots = [paths.apply(i).toUri().getPath() for i in range(paths.size())]
+    assert roots == [scratch_dir(sf_dir, "binary_blob")], roots
 
 
 def test_geo_family_is_single_pruned_scan(spark, sf_dir):

@@ -8,6 +8,8 @@
    runs as a JVM aggregate rather than a Python stateful worker.
 4. Every micro-batch fixture is one mtime-ordered chunk file per
    bucket holding exactly its source rows.
+5. Every stream's state partitions are one wave of the session's task
+   slots, at most ``runner.STATE_PARTITIONS``.
 """
 
 from __future__ import annotations
@@ -18,10 +20,14 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from pokertracker_cassandra_st_spark import session
 from pokertracker_cassandra_st_spark.catalog import normalize_events_ts, table
 from pokertracker_cassandra_st_spark.registry import REGISTRY, get_queries
 from pokertracker_cassandra_st_spark.streaming import runner
-from pokertracker_cassandra_st_spark.streaming.runner import run_to_table
+from pokertracker_cassandra_st_spark.streaming.runner import (
+    run_foreach_batch,
+    run_to_table,
+)
 
 get_queries()
 
@@ -440,3 +446,74 @@ def test_split_is_one_mtime_ordered_chunk_per_bucket(
         src.sort_values(key).reset_index(drop=True),
         check_dtype=False,
     )
+
+
+def _key_stream(spark, tmp_path):
+    """A 2-micro-batch stream of a few ``k`` values, one repeated across
+    the batches."""
+    d = str(tmp_path / "keys")
+    pdf = pd.DataFrame({"k": [1, 2, 2, 3], "_b": [0, 0, 1, 1]})
+    runner._write_chunks(spark.createDataFrame(pdf, "k long, _b int"), d, 2, "k")
+    return runner._read_chunks(spark, "k long", d)
+
+
+def _drain(batch_df, epoch_id) -> None:
+    """A foreachBatch function that runs every partition of the batch."""
+    batch_df.write.format("noop").mode("overwrite").save()
+
+
+def _state_partitions(spark, run):
+    """``run()``'s streams as {run id: numShufflePartitions of the first
+    state operator, one per micro-batch}, read by a query listener."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class StateParts(StreamingQueryListener):
+        def __init__(self) -> None:
+            self.parts: dict[str, list[int]] = {}
+
+        def onQueryStarted(self, event) -> None:
+            pass
+
+        def onQueryProgress(self, event) -> None:
+            p = event.progress
+            self.parts.setdefault(str(p.runId), []).append(
+                p.stateOperators[0].numShufflePartitions
+            )
+
+        def onQueryIdle(self, event) -> None:
+            pass
+
+        def onQueryTerminated(self, event) -> None:
+            pass
+
+    listener = StateParts()
+    spark.streams.addListener(listener)
+    try:
+        run()
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    return listener.parts
+
+
+@pytest.mark.parametrize("slots", [None, 2, 32])
+def test_state_partitions_are_one_wave(spark, tmp_path, monkeypatch, slots):
+    # A memory-sink stream and a foreachBatch stream each run their
+    # stateful stage as one wave of the session's task slots, at most
+    # STATE_PARTITIONS; the session's own shuffle partitions come back
+    # once the streams are done. Slot counts below and above the cap
+    # are what the session reports when monkeypatched, so no thread is
+    # started for them.
+    if slots is not None:
+        monkeypatch.setattr(session, "_parallelism", lambda spark: slots)
+    want = min(8, slots or spark.sparkContext.defaultParallelism)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    src = _key_stream(spark, tmp_path)
+
+    def run():
+        run_to_table(src.groupBy("k").count(), "update")
+        run_foreach_batch(src.dropDuplicates(["k"]), _drain)
+
+    parts = _state_partitions(spark, run)
+    assert list(parts.values()) == [[want, want], [want, want]], parts
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
