@@ -16,10 +16,11 @@ import warnings
 from pyspark.sql import SparkSession
 
 # pandas 2.2 deprecates concat() with empty / all-NA entries influencing
-# the result dtype; pyspark's applyInPandasWithState serializer hits the
-# pattern on every emitted batch (serializers.construct_record_batch
-# concats the result frames with an all-NA filler), spamming a
-# FutureWarning per batch into the bench/driver tail. The behavior the
+# the result dtype; pyspark's applyInPandasWithState serializer, behind
+# streaming.runner.fold_by_user, hits the pattern on every emitted batch
+# (serializers.construct_record_batch concats the result frames with an
+# all-NA filler), spamming a FutureWarning per batch into the
+# bench/driver tail. The behavior the
 # stream path relies on is PINNED by tests/test_pandas_pin.py — so a
 # pandas major bump fails loudly in CI instead of silently changing
 # stream output — and the known-benign warning is silenced here. The

@@ -10,9 +10,12 @@ the source/sink lines change, the transformations are identical.
 This module owns every decision about that fixture and about running a
 stream: the chunk layout (one file per bucket, fed in mtime order,
 ``_SUCCESS`` marker; ``_write_chunks``), the reader (``_read_chunks``),
-and run-to-completion (``_run``: throwaway checkpoint, ``availableNow``,
+run-to-completion (``_run``: throwaway checkpoint, ``availableNow``,
 the one-wave state-partition pin, cleanup) behind ``run_to_table`` and
-``run_foreach_batch``.
+``run_foreach_batch``, and the ordered per-user fold on the Python
+stateful API (``fold_by_user``: a key's Arrow chunks sorted as one by
+event_id, the state carried across micro-batches, the final state per
+user) that every order-dependent streaming fold runs through.
 
 Scale notes: state (dedup keys, session windows, fold state) lives in
 the executor state store partitioned by key — the same shuffle-on-key
@@ -23,17 +26,21 @@ backfill, the same code path a catch-up replay uses in production.
 
 from __future__ import annotations
 
+import functools
 import glob
 import os
 import shutil
 import tempfile
 import time
 import uuid
-from typing import Callable
+from typing import Callable, Iterator
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import StructType
 
 from pokertracker_cassandra_st_spark import catalog, session
 from pokertracker_cassandra_st_spark.catalog import (
@@ -291,3 +298,68 @@ def run_foreach_batch(
     """Run a streaming DataFrame to completion, calling ``fn(batch_df,
     epoch_id)`` on every micro-batch."""
     _run(stream_df, lambda w: w.foreachBatch(fn))
+
+
+def _fold_in_order(
+    names: list[str],
+    cols: list[str],
+    step: Callable[..., tuple],
+    init: tuple,
+    key: tuple,
+    chunks: Iterator[pd.DataFrame],
+    state: GroupState,
+) -> Iterator[pd.DataFrame]:
+    """One user's rows of one micro-batch folded through ``step`` in
+    event_id order, starting from the count and step state kept in
+    ``state``; emits one row, named ``names``: the key, the count and
+    the step state.
+
+    The chunks are joined before the one sort: past
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows pyspark hands
+    a key's rows over in several chunks, and after the shuffle they
+    arrive in no set event_id order, so a sort per chunk misorders the
+    fold."""
+    n, *acc = state.get if state.exists else (0, *init)
+    pdf = pd.concat(list(chunks), ignore_index=True).sort_values("event_id")
+    for row in zip(*(pdf[c].tolist() for c in cols)):
+        acc = step(acc, *row)
+    n += len(pdf)
+    state.update((n, *acc))
+    yield pd.DataFrame([(*key, n, *acc)], columns=names)
+
+
+def fold_by_user(
+    ev: DataFrame,
+    cols: list[str],
+    step: Callable[..., tuple],
+    init: tuple,
+    state_schema: str,
+) -> DataFrame:
+    """Each user's events of the stream ``ev`` folded in event_id order,
+    ``state = step(state, *row)`` from ``init`` over the ``cols`` of each
+    row as Python scalars, the state (``state_schema``) carried in the
+    state store across micro-batches. Returns the final state per user:
+    ``user_id``, ``n`` (events folded) and the fields of
+    ``state_schema``.
+
+    The update-mode sink holds one row per user per micro-batch that
+    changed it; ``n`` grows with every such batch, so the row with the
+    highest ``n`` is the final one."""
+    out = StructType.fromDDL(f"user_id long, n long, {state_schema}")
+    folded = (
+        ev.select("user_id", *dict.fromkeys(["event_id", *cols]))
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            functools.partial(_fold_in_order, out.names, cols, step, init),
+            outputStructType=out,
+            stateStructType=f"n long, {state_schema}",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+    )
+    sink = run_to_table(folded, "update")
+    return (
+        sink.groupBy("user_id")
+        .agg(F.max_by(F.struct(*out.names[1:]), "n").alias("s"))
+        .select("user_id", "s.*")
+    )

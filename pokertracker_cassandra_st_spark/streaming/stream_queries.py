@@ -16,18 +16,18 @@ invariant the reference's test asserts via read-your-writes,
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from pokertracker_cassandra_st_spark.catalog import table
 from pokertracker_cassandra_st_spark.exprs import fround, o_fmt_ts
 from pokertracker_cassandra_st_spark.plans.mv import READ_MODEL_ORACLE, fold, latest, read_model
 from pokertracker_cassandra_st_spark.registry import register
-from pokertracker_cassandra_st_spark.streaming.runner import run_to_table, stream_events
+from pokertracker_cassandra_st_spark.streaming.runner import (
+    fold_by_user,
+    run_to_table,
+    stream_events,
+)
 
 
 def _replay(spark: SparkSession, sf_dir: str, shuffled: bool) -> DataFrame:
@@ -516,32 +516,18 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EWMA_OUT_SCHEMA = "user_id long, n_obs long, ewma double"
-_EWMA_STATE_SCHEMA = "n_obs long, ewma double"
 _EWMA_A = 0.5
 
 
-def _ewma_fold(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-    """True RECURSIVE EWMA per key: ewma ← α·x + (1−α)·ewma, folded in
-    event_id order, state carried across micro-batches. This is the
-    computation the batch engine can only approximate with a truncated
-    lag-sum (q_ts_ewma) — arbitrary stateful streaming does it exactly,
-    one float per key of state."""
-    (user_id,) = key
-    n_obs, ewma = state.get if state.exists else (0, 0.0)
-    for pdf in pdf_iter:
-        if len(pdf) == 0:
-            continue
-        pdf = pdf.sort_values("event_id")
-        for x in pdf["value"]:
-            x = float(x)
-            if n_obs == 0:
-                ewma = x
-            else:
-                ewma = _EWMA_A * x + (1.0 - _EWMA_A) * ewma
-            n_obs += 1
-    state.update((n_obs, ewma))
-    yield pd.DataFrame({"user_id": [user_id], "n_obs": [n_obs], "ewma": [ewma]})
+def _ewma_step(s: tuple, x: float) -> tuple:
+    """True RECURSIVE EWMA: ewma ← α·x + (1−α)·ewma, the first value
+    seeding it. This is the computation the batch engine can only
+    approximate with a truncated lag-sum (q_ts_ewma) — arbitrary
+    stateful streaming does it exactly, one float per key of state."""
+    (ewma,) = s
+    if ewma is None:
+        return (x,)
+    return (_EWMA_A * x + (1.0 - _EWMA_A) * ewma,)
 
 
 @register(
@@ -571,7 +557,7 @@ def q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle IS the exact recursion: DuckDB folds the same values in
     the same order with the same IEEE ops (list_reduce seeds with the
-    first element, mirroring the n_obs==0 branch), so the streaming
+    first element, mirroring the step's unseeded branch), so the streaming
     result is bit-identical to the batch recomputation, rounded for
     display only.
 
@@ -583,28 +569,14 @@ def q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = stream_events(spark, sf_dir, n_files=4).filter(
         (F.col("event_type") == "click") & F.col("value").isNotNull()
     )
-    folded = ev.groupBy("user_id").applyInPandasWithState(
-        _ewma_fold,
-        outputStructType=_EWMA_OUT_SCHEMA,
-        stateStructType=_EWMA_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    sink = run_to_table(folded, "update")
-    # update-mode sink keeps one row per (key, batch); the final state
-    # per key is the row with the highest n_obs
-    return (
-        sink.groupBy("user_id")
-        .agg(F.max_by(F.struct("n_obs", "ewma"), "n_obs").alias("s"))
-        .select(
-            "user_id",
-            F.col("s.n_obs").alias("n_obs"),
-            # fround, NOT F.round: the a=0.5 fold emits exact dyadic
-            # multiples of 0.01/2^k that land ON 6dp rounding ties,
-            # where F.round's BigDecimal-string path disagrees with
-            # DuckDB's float round (see exprs.fround — found at sf0.1)
-            fround("s.ewma", 6).alias("ewma"),
-        )
+    return fold_by_user(ev, ["value"], _ewma_step, (None,), "ewma double").select(
+        "user_id",
+        F.col("n").alias("n_obs"),
+        # fround, NOT F.round: the a=0.5 fold emits exact dyadic
+        # multiples of 0.01/2^k that land ON 6dp rounding ties,
+        # where F.round's BigDecimal-string path disagrees with
+        # DuckDB's float round (see exprs.fround — found at sf0.1)
+        fround("ewma", 6).alias("ewma"),
     )
 
 
@@ -841,42 +813,20 @@ def q_stream_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_dedup_near(spark, sf_dir, work).orderBy("id_a", "id_b")
 
 
-_THROTTLE_OUT_SCHEMA = "user_id long, n_events long, admitted long, rejected long"
-_THROTTLE_STATE_SCHEMA = "hb long, used long, adm long, rej long"
 _THROTTLE_N = 3
 
 
-def _throttle_fold(
-    key, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-key hourly admission fold: at most _THROTTLE_N events per
-    (user, hour bucket) in event_id order; the bucket counter resets
-    when the hour advances (event time is monotone in event_id in this
-    log, so one (hour, used) scalar pair IS the full state)."""
-    (user_id,) = key
-    hb, used, adm, rej = state.get if state.exists else (-1, 0, 0, 0)
-    for pdf in pdf_iter:
-        if len(pdf) == 0:
-            continue
-        pdf = pdf.sort_values("event_id")
-        for h in pdf["hb"]:
-            h = int(h)
-            if h != hb:
-                hb, used = h, 0
-            if used < _THROTTLE_N:
-                used += 1
-                adm += 1
-            else:
-                rej += 1
-    state.update((hb, used, adm, rej))
-    yield pd.DataFrame(
-        {
-            "user_id": [user_id],
-            "n_events": [adm + rej],
-            "admitted": [adm],
-            "rejected": [rej],
-        }
-    )
+def _throttle_step(s: tuple, h: int) -> tuple:
+    """Per-key hourly admission: at most _THROTTLE_N events per (user,
+    hour bucket); the bucket counter resets when the hour advances
+    (event time is monotone in event_id in this log, so one (hour,
+    used) scalar pair IS the full state)."""
+    hb, used, admitted = s
+    if h != hb:
+        hb, used = h, 0
+    if used < _THROTTLE_N:
+        return hb, used + 1, admitted + 1
+    return hb, used, admitted
 
 
 @register(
@@ -922,28 +872,15 @@ def q_stream_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
         # q_ts_stickiness, pre-1970 fixture-pinned)
         F.expr("CAST(FLOOR(unix_timestamp(ts) / 3600.0D) AS BIGINT)").alias("hb"),
     )
-    folded = ev.groupBy("user_id").applyInPandasWithState(
-        _throttle_fold,
-        outputStructType=_THROTTLE_OUT_SCHEMA,
-        stateStructType=_THROTTLE_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    sink = run_to_table(folded, "update")
-    # update-mode sink keeps one row per (key, batch); the final state
-    # per key is the row with the highest n_events (monotone)
     return (
-        sink.groupBy("user_id")
-        .agg(
-            F.max_by(
-                F.struct("n_events", "admitted", "rejected"), "n_events"
-            ).alias("s")
+        fold_by_user(
+            ev, ["hb"], _throttle_step, (None, 0, 0), "hb long, used long, admitted long"
         )
         .select(
             "user_id",
-            F.col("s.n_events").alias("n_events"),
-            F.col("s.admitted").alias("admitted"),
-            F.col("s.rejected").alias("rejected"),
+            F.col("n").alias("n_events"),
+            "admitted",
+            (F.col("n") - F.col("admitted")).alias("rejected"),
         )
         .orderBy("user_id")
     )
@@ -951,46 +888,17 @@ def q_stream_throttle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- q_stream_funnel -------------------------------------------------------- #
 
-_FUNNEL_OUT_SCHEMA = (
-    "user_id long, n_seen long, signup_id long, conv_id long"
-)
-_FUNNEL_STATE_SCHEMA = "fs long, fc long, n long"
-
-
-def _funnel_fold(
-    key, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-user two-step funnel fold: the FIRST 'signup' arms the
-    funnel, the first LATER 'purchase' (by event_id) completes it.
-    State is three longs — no per-event timeline survives a batch."""
-    (user_id,) = key
-    fs, fc, n = state.get if state.exists else (-1, -1, 0)
-    # Concatenate ALL Arrow chunks for the key BEFORE the single sort:
-    # a key whose batch rows span multiple chunks (celebrity user past
-    # maxRecordsPerBatch, or a batch file split past maxPartitionBytes
-    # at 100x) delivers chunks in no guaranteed cross-chunk event_id
-    # order, and per-chunk sorting could latch a non-first signup or
-    # purchase.  Per-key-per-batch cost is unchanged (one sort either
-    # way); only the latch order is fixed.
-    chunks = [pdf for pdf in pdf_iter if len(pdf) > 0]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True).sort_values("event_id")
-        n += len(pdf)
-        for eid, et in zip(pdf["event_id"], pdf["event_type"]):
-            if fs < 0:
-                if et == "signup":
-                    fs = int(eid)
-            elif fc < 0 and et == "purchase":
-                fc = int(eid)
-    state.update((fs, fc, n))
-    yield pd.DataFrame(
-        {
-            "user_id": [user_id],
-            "n_seen": [n],
-            "signup_id": [fs],
-            "conv_id": [fc],
-        }
-    )
+def _funnel_step(s: tuple, event_id: int, event_type: str) -> tuple:
+    """Per-user two-step funnel: the FIRST 'signup' arms the funnel,
+    the first LATER 'purchase' (by event_id) completes it. State is two
+    ids — no per-event timeline survives a batch."""
+    signup_id, conv_id = s
+    if signup_id is None:
+        if event_type == "signup":
+            signup_id = event_id
+    elif conv_id is None and event_type == "purchase":
+        conv_id = event_id
+    return signup_id, conv_id
 
 
 @register(
@@ -1030,30 +938,21 @@ def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB/day this is transformWithState keyed on user with
     RocksDB state and a TTL on unconverted funnels.
     """
-    ev = stream_events(spark, sf_dir, n_files=4).select(
-        "user_id", "event_id", "event_type"
-    )
-    folded = ev.groupBy("user_id").applyInPandasWithState(
-        _funnel_fold,
-        outputStructType=_FUNNEL_OUT_SCHEMA,
-        stateStructType=_FUNNEL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    sink = run_to_table(folded, "update")
-    # update-mode sink keeps one row per (key, batch); n_seen is
-    # monotone, so max_by picks each key's final state
+    ev = stream_events(spark, sf_dir, n_files=4)
     return (
-        sink.groupBy("user_id")
-        .agg(F.max_by(F.struct("n_seen", "signup_id", "conv_id"), "n_seen").alias("s"))
-        .filter(F.col("s.signup_id") >= 0)
+        fold_by_user(
+            ev,
+            ["event_id", "event_type"],
+            _funnel_step,
+            (None, None),
+            "signup_id long, conv_id long",
+        )
+        .filter(F.col("signup_id").isNotNull())
         .select(
             "user_id",
-            F.col("s.signup_id").alias("signup_id"),
-            F.when(F.col("s.conv_id") >= 0, F.col("s.conv_id")).alias(
-                "conv_id"
-            ),
-            (F.col("s.conv_id") >= 0).alias("converted"),
+            "signup_id",
+            "conv_id",
+            F.col("conv_id").isNotNull().alias("converted"),
         )
         .orderBy("user_id")
     )
@@ -1061,42 +960,21 @@ def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- q_stream_gap_detect ---------------------------------------------------- #
 
-_GAP_OUT_SCHEMA = "user_id long, n_events long, n_gaps long, max_gap_s long"
-_GAP_STATE_SCHEMA = "last_ts long, n long, gaps long, mx long"
 _GAP_THRESHOLD_S = 3600
 
 
-def _gap_fold(
-    key, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Per-user inter-event gap fold: ONE long of carried timestamp
-    state turns gap detection into a streaming one-pass — no timeline
-    is ever stored. Chunks concatenate before the single event_id
-    sort (the q_stream_funnel chunk-order lesson)."""
-    (user_id,) = key
-    last_ts, n, gaps, mx = state.get if state.exists else (-1, 0, 0, 0)
-    chunks = [pdf for pdf in pdf_iter if len(pdf) > 0]
-    if chunks:
-        pdf = pd.concat(chunks, ignore_index=True).sort_values("event_id")
-        n += len(pdf)
-        for t in pdf["tss"]:
-            t = int(t)
-            if last_ts >= 0:
-                gap = t - last_ts
-                if gap > _GAP_THRESHOLD_S:
-                    gaps += 1
-                if gap > mx:
-                    mx = gap
-            last_ts = t
-    state.update((last_ts, n, gaps, mx))
-    yield pd.DataFrame(
-        {
-            "user_id": [user_id],
-            "n_events": [n],
-            "n_gaps": [gaps],
-            "max_gap_s": [mx],
-        }
-    )
+def _gap_step(s: tuple, t: int) -> tuple:
+    """Per-user inter-event gaps: ONE long of carried timestamp state
+    turns gap detection into a streaming one-pass — no timeline is ever
+    stored."""
+    last_ts, n_gaps, max_gap_s = s
+    if last_ts is not None:
+        gap = t - last_ts
+        if gap > _GAP_THRESHOLD_S:
+            n_gaps += 1
+        if gap > max_gap_s:
+            max_gap_s = gap
+    return t, n_gaps, max_gap_s
 
 
 @register(
@@ -1138,26 +1016,14 @@ def q_stream_gap_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.unix_timestamp("ts").cast("long").alias("tss"),
     )
-    folded = ev.groupBy("user_id").applyInPandasWithState(
-        _gap_fold,
-        outputStructType=_GAP_OUT_SCHEMA,
-        stateStructType=_GAP_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    sink = run_to_table(folded, "update")
     return (
-        sink.groupBy("user_id")
-        .agg(
-            F.max_by(
-                F.struct("n_events", "n_gaps", "max_gap_s"), "n_events"
-            ).alias("s")
+        fold_by_user(
+            ev,
+            ["tss"],
+            _gap_step,
+            (None, 0, 0),
+            "last_ts long, n_gaps long, max_gap_s long",
         )
-        .select(
-            "user_id",
-            F.col("s.n_events").alias("n_events"),
-            F.col("s.n_gaps").alias("n_gaps"),
-            F.col("s.max_gap_s").alias("max_gap_s"),
-        )
+        .select("user_id", F.col("n").alias("n_events"), "n_gaps", "max_gap_s")
         .orderBy("user_id")
     )

@@ -766,6 +766,12 @@ REL_QUERIES.extend(["q_graph_assortativity", "q_dq_key_audit"])
 # state, and the single-event user arms or completes nothing
 EVENT_QUERIES.append("q_agg_delta_ratio_var")
 STREAM_QUERIES.append("q_stream_funnel")
+# the recursive EWMA folds user 0's clicks (most of the log) in
+# event_id order; NULL values are filtered before the fold on both
+# engines
+STREAM_QUERIES.append("q_stream_ewma")
+# the order-dependent folds of runner.fold_by_user
+ORDERED_FOLDS = ["q_stream_ewma", "q_stream_throttle", "q_stream_funnel", "q_stream_gap_detect"]
 
 
 def _inject_rel_nulls(rng, adv):
@@ -809,6 +815,22 @@ def test_oracle_holds_on_adversarial_data(spark, adv_dir, adv_duck, name):
     pdf = q.fn(spark, adv_dir).toPandas()
     odf = adv_duck.execute(q.oracle).fetchdf()
     assert_frames_match(pdf, odf, f"{name}[adversarial]")
+
+
+@pytest.mark.parametrize("name", ORDERED_FOLDS)
+def test_ordered_folds_hold_across_small_arrow_chunks(spark, adv_dir, adv_duck, name):
+    # At 64 rows per Arrow batch, user 0's ~600 events per micro-batch
+    # reach the fold as about ten chunks; the fold must still see them
+    # in event_id order.
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "64")
+    try:
+        pdf = REGISTRY[name].fn(spark, adv_dir).toPandas()
+    finally:
+        spark.conf.set(conf, prev)
+    odf = adv_duck.execute(REGISTRY[name].oracle).fetchdf()
+    assert_frames_match(pdf, odf, f"{name}[adversarial, 64-row chunks]")
 
 
 # JSON payloads q_fn_json must classify correctly even though the shared
@@ -1344,6 +1366,10 @@ FLOOR_BUCKET_QUERIES = [
     "q_ts_cusum",
     "q_ts_new_users",
     "q_ts_mad_anomaly",
+    # the per-user folds: throttle's hour bucket is a FLOOR division,
+    # and gap_detect's first event may be pre-1970
+    "q_stream_throttle",
+    "q_stream_gap_detect",
 ]
 
 

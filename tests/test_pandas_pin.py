@@ -6,10 +6,10 @@ concatenating the result frames with an ALL-NA object-dtype filler frame
 deprecates letting such entries influence the concat result
 (FutureWarning, silenced with a message-scoped filter in session.py);
 pandas 3.x changes the behavior. These tests assert the exact properties
-the four order-dependent Python folds depend on (``_ewma_fold``,
-``_throttle_fold``, ``_funnel_fold`` and ``_gap_fold`` in
-streaming/stream_queries.py), so a pandas major bump turns into a loud
-CI failure here instead of silently reshaped streaming batches.
+the order-dependent Python folds depend on (all of them run through
+``fold_by_user`` in streaming/runner.py), so a pandas major bump turns
+into a loud CI failure here instead of silently reshaped streaming
+batches.
 """
 
 from __future__ import annotations
