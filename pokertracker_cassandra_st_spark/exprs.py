@@ -12,11 +12,17 @@ Scale notes: decimal aggregation is marginally slower than double in
 Tungsten but stays inside whole-stage codegen and partial aggregation
 (map-side combine) — no extra shuffle, still exact at any row count
 (DECIMAL(18,4) sums promote to DECIMAL(28,4) giving 10^24 headroom).
+
+The text rules that several operator modules share live here too:
+:func:`word_ngrams` (the token windows every shingle, k-gram and
+n-gram operator is built on) and :func:`near_copies` (the near-copy
+fixture of the dedup tiers, their streaming twin and the decontamination
+checks).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEC = "decimal(18,4)"
@@ -138,3 +144,49 @@ def fround(col: str | Column, scale: int = 6) -> Column:
     return (
         F.signum(c) * F.floor(F.abs(c) * p + F.lit(0.5)) / p
     ).cast("double")
+
+
+def word_ngrams(tokens: str | Column, n: int) -> Column:
+    """The n-token windows of a token array, each joined by ``" "``, in
+    position order with duplicates kept; ``[]`` for fewer than ``n``
+    tokens and for a NULL array. ``n`` >= 1.
+
+    Pass a named column, not an inline ``split(...)``: the window lambda
+    reads ``tokens`` once per window, outside codegen subexpression
+    elimination. The size guard is in the expression, not left to a
+    filter before it: Spark's ``sequence(1, m)`` counts DOWN for m < 1,
+    so ``slice`` would get index 0 and throw, and the optimizer may
+    evaluate a projection on rows an earlier filter excludes (it pushes
+    projections through a Union). ``when`` evaluates its branch only
+    for rows that pass the guard.
+    """
+    t = F.col(tokens) if isinstance(tokens, str) else tokens
+    return F.when(
+        F.size(t) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(t) - (n - 1)),
+            lambda i: F.array_join(F.slice(t, i, n), " "),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+# Near copies of a document start at this id offset (augmented corpus,
+# streamed document split).
+AUG_OFFSET = 1_000_000
+
+
+def near_copies(docs: DataFrame, offset: int, *carry: str | Column) -> DataFrame:
+    """The near copy of every document of ``docs`` with >= 2 tokens:
+    ``doc_id + offset`` and the text without its last space-separated
+    token, plus the ``carry`` columns.
+
+    Single-token documents get no copy: the DuckDB oracles spell the
+    rule with ``list_slice(l, 1, 0)``, which is NULL there where Spark's
+    ``slice`` gives ``[]``.
+    """
+    t = F.split("text", " ")
+    return docs.filter(F.size(t) >= 2).select(
+        (F.col("doc_id") + offset).alias("doc_id"),
+        F.array_join(F.slice(t, 1, F.size(t) - 1), " ").alias("text"),
+        *carry,
+    )

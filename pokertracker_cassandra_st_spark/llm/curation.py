@@ -23,11 +23,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pokertracker_cassandra_st_spark.catalog import table
-from pokertracker_cassandra_st_spark.llm.dedup import (
-    _AUG_ORACLE,
-    AUG_OFFSET,
-    augmented_corpus,
-)
+from pokertracker_cassandra_st_spark.exprs import AUG_OFFSET, word_ngrams
+from pokertracker_cassandra_st_spark.llm.dedup import _AUG_ORACLE, augmented_corpus
 from pokertracker_cassandra_st_spark.registry import register
 
 # ---------------------------------------------------------------- #
@@ -62,6 +59,28 @@ GROUP BY tr.doc_id
 """
 
 
+def contamination_hits(corpus: DataFrame) -> DataFrame:
+    """(sh, train_id, eval_id): one row per distinct word-8-gram a train
+    document shares with an eval document of the augmented ``corpus``.
+
+    Eval = original docs with doc_id % 20 == 0, train = the near copies
+    (doc_id >= AUG_OFFSET). The eval side is benchmark-sized, so it
+    broadcasts and the train side never shuffles for the join.
+    """
+    sh = (
+        corpus.select("doc_id", F.split("text", " ").alias("t"))
+        .select("doc_id", F.explode(word_ngrams("t", _NGRAM)).alias("sh"))
+        .distinct()
+    )
+    ev = sh.filter((F.col("doc_id") % 20 == 0) & (F.col("doc_id") < AUG_OFFSET)).select(
+        F.col("doc_id").alias("eval_id"), "sh"
+    )
+    tr = sh.filter(F.col("doc_id") >= AUG_OFFSET).select(
+        F.col("doc_id").alias("train_id"), "sh"
+    )
+    return tr.join(F.broadcast(ev), "sh")
+
+
 @register("q_text_contamination", oracle=_CONTAMINATION_ORACLE, tags=("llm", "text"))
 def q_text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: training documents that share at least
@@ -82,31 +101,8 @@ def q_text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     (xxhash64) before the join; here it stays a string so the DuckDB
     differential is engine-independent.
     """
-    corpus = augmented_corpus(spark, sf_dir)
-    toks = F.split("text", " ")
-    sh = (
-        corpus.select("doc_id", toks.alias("t"))
-        .filter(F.size("t") >= _NGRAM)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    # greatest(...,1): totality guard (see llm/dedup.py)
-                    F.sequence(F.lit(1), F.greatest(F.size("t") - (_NGRAM - 1), F.lit(1))),
-                    lambda i: F.array_join(F.slice("t", i, _NGRAM), " "),
-                )
-            ).alias("sh"),
-        )
-        .distinct()
-    )
-    ev = sh.filter((F.col("doc_id") % 20 == 0) & (F.col("doc_id") < AUG_OFFSET)).select(
-        F.col("doc_id").alias("eval_id"), "sh"
-    )
-    tr = sh.filter(F.col("doc_id") >= AUG_OFFSET).select(
-        F.col("doc_id").alias("train_id"), "sh"
-    )
     return (
-        tr.join(F.broadcast(ev), "sh")
+        contamination_hits(augmented_corpus(spark, sf_dir))
         .groupBy("train_id")
         .agg(
             F.countDistinct("sh").alias("n_shared_shingles"),

@@ -8,8 +8,16 @@ Four tiers, cheapest-first — the order a 100 TB pipeline applies them:
   4. n-gram Jaccard verification — exact overlap on candidates only.
 
 The near-dup queries run over an AUGMENTED corpus (each document
-unioned with a copy missing its last token, id+1_000_000) so the
-operators demonstrably find pairs on the driver's all-distinct corpus.
+unioned with its near copy, ``exprs.near_copies``: the last token
+dropped, id + ``AUG_OFFSET``) so the operators demonstrably find pairs
+on the driver's all-distinct corpus.
+
+Shared shingle helpers: a word-5-gram shingle is ``exprs.word_ngrams(t,
+5)``; ``_shingle_sets`` is each document's distinct shingle set (the
+near_minhash, incremental and overlap tiers), and ``_shingle_overlap``
+is the one shingle self-join that counts shared shingles per document
+pair with both set sizes (q_dedup_ngram_jaccard, q_dedup_containment,
+q_dedup_threshold_curve).
 """
 
 from __future__ import annotations
@@ -19,9 +27,8 @@ from pyspark.sql import functions as F
 
 from pokertracker_cassandra_st_spark import ckpt
 from pokertracker_cassandra_st_spark.catalog import table
+from pokertracker_cassandra_st_spark.exprs import AUG_OFFSET, near_copies, word_ngrams
 from pokertracker_cassandra_st_spark.registry import register
-
-AUG_OFFSET = 1_000_000
 
 # ---- augmented corpus (engine + oracle must agree exactly) ----------
 
@@ -38,18 +45,62 @@ WHERE len(string_split(text, ' ')) >= 2
 
 def augmented_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split("text", " ")
-    # only docs with >= 2 tokens get a drop-last-token mutation — the
-    # degenerate slice of a 1-token doc diverges between engines
-    # (DuckDB list_slice(l, 1, 0) -> NULL, Spark slice -> [])
-    mutated = (
-        d.filter(F.size(toks) >= 2)
+    return d.unionByName(near_copies(d, AUG_OFFSET))
+
+
+# ---- shared word-5-gram shingles (engine twin of _SHINGLE_ORACLE) ----
+
+
+def _shingle_sets(docs: DataFrame, *carry: str) -> DataFrame:
+    """(doc_id, *carry, shingles): each document's distinct word-5-gram
+    set; documents shorter than one shingle drop out."""
+    return (
+        docs.select("doc_id", *carry, F.split("text", " ").alias("t"))
+        .filter(F.size("t") >= 5)
         .select(
-            (F.col("doc_id") + AUG_OFFSET).alias("doc_id"),
-            F.array_join(F.slice(toks, 1, F.size(toks) - 1), " ").alias("text"),
+            "doc_id", *carry, F.array_distinct(word_ngrams("t", 5)).alias("shingles")
         )
     )
-    return d.unionByName(mutated)
+
+
+def _shingle_overlap(corpus: DataFrame) -> DataFrame:
+    """(id_a, id_b, n_common, na, nb) for every pair id_a < id_b of
+    documents sharing at least one word-5-gram: the shared-shingle
+    count and both set sizes, the inputs of every exact overlap score.
+    Only (shingle, doc_id) pairs shuffle, never text.
+    """
+    # optimization r13 (guide §5): sh feeds the set-size counts AND
+    # both self-join sides (3 lineages = 3 corpus tokenize+shingle
+    # passes before); counts feeds both per-pair attaches (2 more)
+    sh = ckpt.materialized(
+        _shingle_sets(corpus)
+        .select("doc_id", F.explode("shingles").alias("sh"))
+        .distinct()
+    )
+    counts = ckpt.materialized(sh.groupBy("doc_id").agg(F.count("*").alias("n")))
+    common = (
+        sh.alias("a")
+        .join(
+            sh.alias("b"),
+            (F.col("a.sh") == F.col("b.sh"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+        .agg(F.count("*").alias("n_common"))
+    )
+    ca = counts.alias("ca")
+    cb = counts.alias("cb")
+    return (
+        common.join(ca, F.col("id_a") == F.col("ca.doc_id"))
+        .join(cb, F.col("id_b") == F.col("cb.doc_id"))
+        .select(
+            "id_a",
+            "id_b",
+            "n_common",
+            F.col("ca.n").alias("na"),
+            F.col("cb.n").alias("nb"),
+        )
+    )
 
 
 # ---- native seeded MinHash family (optimization r14, guide §4/§1.2) --
@@ -186,51 +237,12 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     never all-pairs. The shingle join shuffles (shingle, doc_id) pairs
     only — not document text.
     """
-    corpus = augmented_corpus(spark, sf_dir)
-    toks = F.split("text", " ")
-    sh = (
-        corpus.select("doc_id", toks.alias("t"))
-        # docs shorter than one shingle produce none (also guards
-        # Spark's sequence(1, n-4) flipping DESCENDING when n < 5)
-        .filter(F.size("t") >= 5)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    # greatest(...,1): totality guard — the optimizer
-                    # may evaluate this projection on rows the size>=5
-                    # filter excludes (PushProjectionThroughUnion), and
-                    # sequence(1, n<=0) descends through 0, which makes
-                    # slice() throw; clamped rows are filtered anyway
-                    F.sequence(F.lit(1), F.greatest(F.size("t") - 4, F.lit(1))),
-                    lambda i: F.array_join(F.slice("t", i, 5), " "),
-                )
-            ).alias("sh"),
-        )
-        .distinct()
-    )
-    # optimization r13 (guide §5): sh feeds the set-size counts AND
-    # both self-join sides (3 lineages = 3 corpus tokenize+shingle
-    # passes before); counts feeds both per-pair attaches (2 more)
-    sh = ckpt.materialized(sh)
-    counts = ckpt.materialized(sh.groupBy("doc_id").agg(F.count("*").alias("n")))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    common = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    ca = counts.alias("ca")
-    cb = counts.alias("cb")
+    p = _shingle_overlap(augmented_corpus(spark, sf_dir))
     jac = F.col("n_common").cast("double") / (
-        F.col("ca.n") + F.col("cb.n") - F.col("n_common")
+        F.col("na") + F.col("nb") - F.col("n_common")
     )
-    return (
-        common.join(ca, F.col("id_a") == F.col("ca.doc_id"))
-        .join(cb, F.col("id_b") == F.col("cb.doc_id"))
-        .filter(jac >= 0.5)
-        .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
+    return p.filter(jac >= 0.5).select(
+        "id_a", "id_b", F.round(jac, 6).alias("jaccard")
     )
 
 
@@ -268,28 +280,9 @@ def q_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     host). Same hash family, same recall, byte-identical output,
     scale-safe plan.
     """
-    corpus = augmented_corpus(spark, sf_dir)
-    toks = F.split("text", " ")
     # distinct 5-gram shingle set per doc — the SAME set the exact tier
-    # and the oracle use (docs shorter than one shingle drop out)
-    sh = (
-        corpus.select("doc_id", toks.alias("t"))
-        .filter(F.size("t") >= 5)
-        .select(
-            "doc_id",
-            F.array_distinct(
-                F.transform(
-                    # greatest(...,1): totality guard — the optimizer
-                    # may evaluate this projection on rows the size>=5
-                    # filter excludes (PushProjectionThroughUnion), and
-                    # sequence(1, n<=0) descends through 0, which makes
-                    # slice() throw; clamped rows are filtered anyway
-                    F.sequence(F.lit(1), F.greatest(F.size("t") - 4, F.lit(1))),
-                    lambda i: F.array_join(F.slice("t", i, 5), " "),
-                )
-            ).alias("shingles"),
-        )
-    )
+    # and the oracle use
+    sh = _shingle_sets(augmented_corpus(spark, sf_dir))
     # optimization r13 (guide §5): sh feeds the signature pass AND the
     # exact-verify explode; buckets feeds both candidate self-join
     # sides (each re-ran corpus -> shingle -> signature before); ex
@@ -1128,8 +1121,8 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     position-exact spans). Docs shorter than one window have no spans
     and are absent by construction.
 
-    Scale notes: windows are built with array HOFs (filter/sequence/
-    transform/slice) in one narrow pass — the suffix-array formulation
+    Scale notes: windows are built with array HOFs (filter,
+    exprs.word_ngrams, transform) in one narrow pass — the suffix-array formulation
     is sequential, the windowed one is embarrassingly parallel, which
     is why production ExactSubstr at corpus scale shards exactly like
     this. The only shuffles carry (16-byte-hash, doc_id) pairs — a
@@ -1142,15 +1135,10 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id", F.expr("filter(split(text, ' '), t -> t != '')").alias("tk")
-    ).where(F.size("tk") >= _SUB_W)
+    )
     wins = toks.select(
         "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, greatest(size(tk) - {_SUB_W - 1}, 1)),"
-                f" i -> md5(concat_ws(' ', slice(tk, i, {_SUB_W}))))"
-            )
-        ).alias("h"),
+        F.explode(F.transform(word_ngrams("tk", _SUB_W), F.md5)).alias("h"),
     )
     span = wins.groupBy("h").agg(F.countDistinct("doc_id").alias("nd"))
     # shuffle_hash: span's cardinality is ~distinct windows (corpus
@@ -1702,17 +1690,10 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard-sized, not corpus-sized).
     """
     corpus = table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split("text", " ")
     shard = (
         corpus.filter(F.col("doc_id") % 4 == 0)
         .select((F.col("doc_id") + INC_OFFSET).alias("doc_id"), "text")
-        .unionByName(
-            corpus.filter((F.col("doc_id") % 4 == 1) & (F.size(toks) >= 2))
-            .select(
-                (F.col("doc_id") + INC_OFFSET).alias("doc_id"),
-                F.array_join(F.slice(toks, 1, F.size(toks) - 1), " ").alias("text"),
-            )
-        )
+        .unionByName(near_copies(corpus.filter(F.col("doc_id") % 4 == 1), INC_OFFSET))
     )
 
     # tier 1: digest join — corpus digests against the shard digest
@@ -1734,23 +1715,9 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("new_id", F.col("doc_id").alias("corpus_id"))
     )
 
-    # shared shingle builder (identical to the full-corpus tiers)
+    # the full-corpus tiers' shingle sets, carrying the content digest
     def shingled(df: DataFrame) -> DataFrame:
-        t = F.split("text", " ")
-        return (
-            df.select("doc_id", t.alias("t"), F.sha2("text", 256).alias("h"))
-            .filter(F.size("t") >= 5)
-            .select(
-                "doc_id",
-                "h",
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(1), F.greatest(F.size("t") - 4, F.lit(1))),
-                        lambda i: F.array_join(F.slice("t", i, 5), " "),
-                    )
-                ).alias("shingles"),
-            )
-        )
+        return _shingle_sets(df.withColumn("h", F.sha2("text", 256)), "h")
 
     # optimization r13 (guide §5): each side's shingle frame feeds the
     # LSH buckets, the leading-fingerprint tier AND the verify join
@@ -1886,58 +1853,18 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers in both engines; the admission filter never touches a
     float.
     """
-    corpus = augmented_corpus(spark, sf_dir)
-    toks = F.split("text", " ")
-    sh = (
-        corpus.select("doc_id", toks.alias("t"))
-        .filter(F.size("t") >= 5)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    # greatest(...,1): totality guard, see ngram_jaccard
-                    F.sequence(F.lit(1), F.greatest(F.size("t") - 4, F.lit(1))),
-                    lambda i: F.array_join(F.slice("t", i, 5), " "),
-                )
-            ).alias("sh"),
-        )
-        .distinct()
-    )
-    # optimization r13 (guide §5): sh feeds the set-size counts AND
-    # both self-join sides (3 lineages = 3 corpus tokenize+shingle
-    # passes before); counts feeds both per-pair attaches (2 more)
-    sh = ckpt.materialized(sh)
-    counts = ckpt.materialized(sh.groupBy("doc_id").agg(F.count("*").alias("n")))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    ca = counts.alias("ca")
-    cb = counts.alias("cb")
+    p = _shingle_overlap(augmented_corpus(spark, sf_dir))
     nc = F.col("n_common").cast("double")
-    return (
-        common.join(ca, F.col("id_a") == F.col("ca.doc_id"))
-        .join(cb, F.col("id_b") == F.col("cb.doc_id"))
-        .filter(
-            F.lit(5) * F.col("n_common")
-            >= F.lit(4) * F.least(F.col("ca.n"), F.col("cb.n"))
-        )
-        .select(
-            "id_a",
-            "id_b",
-            F.round(nc / F.col("ca.n"), 6).alias("contain_a_in_b"),
-            F.round(nc / F.col("cb.n"), 6).alias("contain_b_in_a"),
-            F.round(
-                nc / (F.col("ca.n") + F.col("cb.n") - F.col("n_common")), 6
-            ).alias("jaccard"),
-        )
+    return p.filter(
+        F.lit(5) * F.col("n_common") >= F.lit(4) * F.least(F.col("na"), F.col("nb"))
+    ).select(
+        "id_a",
+        "id_b",
+        F.round(nc / F.col("na"), 6).alias("contain_a_in_b"),
+        F.round(nc / F.col("nb"), 6).alias("contain_b_in_a"),
+        F.round(nc / (F.col("na") + F.col("nb") - F.col("n_common")), 6).alias(
+            "jaccard"
+        ),
     )
 
 
@@ -2199,58 +2126,18 @@ def q_dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     literals; each qualifying pair contributes exactly two id rows, so
     n_pairs = count div 2 stays exact.
 
-    Scale notes: ONE shared-shingle pair build (the
-    q_dedup_ngram_jaccard machinery — shingle keys shuffle, text never
+    Scale notes: ONE shared-shingle pair build (``_shingle_overlap``,
+    shared with q_dedup_ngram_jaccard — shingle keys shuffle, text never
     does), then a bounded x5 threshold explode on the pairs frame with
     BOTH outputs (pair count, distinct flagged docs) aggregated from
     the SAME exploded subtree — one plan branch, no pair-frame
     re-reference, no second shingle join.  At 100 TB the pair frame is
     the LSH candidate set, same as the verifier's.
     """
-    corpus = augmented_corpus(spark, sf_dir)
-    toks = F.split("text", " ")
-    sh = (
-        corpus.select("doc_id", toks.alias("t"))
-        .filter(F.size("t") >= 5)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.greatest(F.size("t") - 4, F.lit(1))),
-                    lambda i: F.array_join(F.slice("t", i, 5), " "),
-                )
-            ).alias("sh"),
-        )
-        .distinct()
-    )
-    # optimization r13 (guide §5): sh feeds the set-size counts AND
-    # both self-join sides (3 lineages = 3 corpus tokenize+shingle
-    # passes before); counts feeds both per-pair attaches (2 more)
-    sh = ckpt.materialized(sh)
-    counts = ckpt.materialized(sh.groupBy("doc_id").agg(F.count("*").alias("n")))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    ca = counts.alias("ca")
-    cb = counts.alias("cb")
-    pairs = (
-        common.join(ca, F.col("id_a") == F.col("ca.doc_id"))
-        .join(cb, F.col("id_b") == F.col("cb.doc_id"))
-        .select(
-            "id_a",
-            "id_b",
-            F.expr(
-                "(1000000 * n_common) div (ca.n + cb.n - n_common)"
-            ).alias("jac_ppm"),
-        )
+    pairs = _shingle_overlap(augmented_corpus(spark, sf_dir)).select(
+        "id_a",
+        "id_b",
+        F.expr("(1000000 * n_common) div (na + nb - n_common)").alias("jac_ppm"),
     )
     sweep = (
         pairs.select(

@@ -21,8 +21,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pokertracker_cassandra_st_spark.catalog import table
-from pokertracker_cassandra_st_spark.exprs import o_md5_16bit
+from pokertracker_cassandra_st_spark.exprs import AUG_OFFSET, o_md5_16bit
 from pokertracker_cassandra_st_spark.registry import register
+from pokertracker_cassandra_st_spark.llm.curation import contamination_hits
+from pokertracker_cassandra_st_spark.llm.dedup import _AUG_ORACLE as _GATE_AUG
+from pokertracker_cassandra_st_spark.llm.dedup import augmented_corpus
 from pokertracker_cassandra_st_spark.llm.text import STOPWORDS
 
 _SW_SQL = "['" + "','".join(STOPWORDS) + "']"
@@ -741,9 +744,6 @@ def q_pipeline_quality_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---- q_pipeline_contamination_gate ------------------------------------------ #
 
 
-from pokertracker_cassandra_st_spark.llm.dedup import _AUG_ORACLE as _GATE_AUG
-
-
 @register(
     "q_pipeline_contamination_gate",
     oracle=f"""
@@ -813,40 +813,14 @@ def q_pipeline_contamination_gate(spark: SparkSession, sf_dir: str) -> DataFrame
     contributes two plan branches (shingles + token counts) — the
     augmented-corpus scan doctrine, bounded and documented.
     """
-    from pokertracker_cassandra_st_spark.llm.dedup import (
-        AUG_OFFSET,
-        augmented_corpus,
-    )
-
     corpus = augmented_corpus(spark, sf_dir)
-    toks = F.split("text", " ")
-    sh = (
-        corpus.select("doc_id", toks.alias("t"))
-        .filter(F.size("t") >= 8)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.greatest(F.size("t") - 7, F.lit(1))),
-                    lambda i: F.array_join(F.slice("t", i, 8), " "),
-                )
-            ).alias("sh"),
-        )
-        .distinct()
-    )
-    ev = sh.filter(
-        (F.col("doc_id") % 20 == 0) & (F.col("doc_id") < AUG_OFFSET)
-    ).select(F.col("doc_id").alias("eval_id"), "sh")
-    tr = sh.filter(F.col("doc_id") >= AUG_OFFSET).select(
-        F.col("doc_id").alias("train_id"), "sh"
-    )
     hits = (
-        tr.join(F.broadcast(ev), "sh")
+        contamination_hits(corpus)
         .groupBy("train_id")
         .agg(F.countDistinct("sh").alias("c"))
     )
     train = corpus.filter(F.col("doc_id") >= AUG_OFFSET).select(
-        "doc_id", F.size(toks).cast("long").alias("n_tokens")
+        "doc_id", F.size(F.split("text", " ")).cast("long").alias("n_tokens")
     )
     g = train.join(
         F.broadcast(hits), train["doc_id"] == hits["train_id"], "left"

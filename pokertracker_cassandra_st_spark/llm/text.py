@@ -16,7 +16,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pokertracker_cassandra_st_spark.catalog import table
-from pokertracker_cassandra_st_spark.exprs import davg, md5_16bit, o_davg, o_md5_16bit
+from pokertracker_cassandra_st_spark.exprs import (
+    davg,
+    md5_16bit,
+    o_davg,
+    o_md5_16bit,
+    word_ngrams,
+)
 from pokertracker_cassandra_st_spark.registry import register
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
@@ -748,10 +754,10 @@ def q_text_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarantees detection of any shared token run of length >= k+w-1
     while storing ~2/(w+1) of the hashes.
 
-    Entirely narrow higher-order functions (sequence/transform/slice/
-    array_min on the token array) — ZERO shuffles: fingerprinting is a
-    map over the corpus, which is exactly why it scales to 100 TB as an
-    ingest-time step. Output is the per-doc fingerprint-set summary
+    Entirely narrow higher-order functions (word_ngrams, then
+    sequence/transform/slice/array_min over the gram hashes) — ZERO
+    shuffles: fingerprinting is a map over the corpus, which is exactly
+    why it scales to 100 TB as an ingest-time step. Output is the per-doc fingerprint-set summary
     (count, lexicographic first/last of the sorted distinct set); the
     full set feeds an exact-dedup bucket join downstream (same shape as
     q_dedup_lines). Hashes are md5 hex prefixes — identical strings in
@@ -773,15 +779,9 @@ def q_text_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = d.select("doc_id", tk.alias("tk")).where(
         F.size(tk) >= _WIN_K + _WIN_W - 1
     )
-    kg = F.when(
-        F.size("tk") >= _WIN_K,
-        F.transform(
-            F.sequence(F.lit(1), F.size("tk") - (_WIN_K - 1)),
-            lambda i: F.substring(
-                F.md5(F.array_join(F.slice("tk", i, _WIN_K), " ")), 1, 12
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    kg = F.transform(
+        word_ngrams("tk", _WIN_K), lambda g: F.substring(F.md5(g), 1, 12)
+    )
     g = t.select("doc_id", kg.alias("kg"))
     fps = F.when(
         F.size("kg") >= _WIN_W,
@@ -1920,10 +1920,10 @@ def q_text_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     targeted variant, this is the corpus-wide scalar).
 
     Scale notes: ZERO exchanges — tokenization, distinct-type counting
-    (array_distinct), and bigram construction (transform over a
-    per-row index sequence) are all row-local array expressions inside
-    codegen; no explode, no shuffle, output is docs-sized. The ratios
-    are integral ppm, no floats anywhere.
+    (array_distinct), and bigram construction (exprs.word_ngrams) are
+    all row-local array expressions inside codegen; no explode, no
+    shuffle, output is docs-sized. The ratios are integral ppm, no
+    floats anywhere.
     """
     toks = F.split("text", " ")
     # optimization r13 (the q_text_winnow lesson, guide §1.2): tokenize
@@ -1942,18 +1942,8 @@ def q_text_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.size("tk").cast("long").alias("n_tokens"),
         F.size(F.array_distinct("tk")).cast("long").alias("n_types"),
-        F.when(
-            F.size("tk") >= 2,
-            F.size(
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("tk") - 1),
-                        lambda i: F.array_join(F.slice("tk", i, 2), " "),
-                    )
-                )
-            ).cast("long"),
-        )
-        .otherwise(F.lit(0).cast("long"))
+        F.size(F.array_distinct(word_ngrams("tk", 2)))
+        .cast("long")
         .alias("n_bigram_types"),
     )
     return d.select(
@@ -2014,8 +2004,8 @@ def q_text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     and q_dedup_ngram_jaccard (which scores pairs): novelty is a
     per-document scalar against the whole corpus, no pair enumeration.
 
-    Scale notes: trigrams build row-locally (transform over an index
-    sequence, array_distinct) and explode to 16-hex-char md5 DIGESTS —
+    Scale notes: trigrams build row-locally (exprs.word_ngrams,
+    array_distinct) and explode to 16-hex-char md5 DIGESTS —
     the shuffle never carries text (the dedup-tier doctrine). The
     first-occurrence is min(doc_id) OVER the digest partition — ONE
     digest exchange, no groupBy+join back (which would re-reference
@@ -2027,17 +2017,12 @@ def q_text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenize ONCE into a named column (optimization r13 — the
     # q_text_winnow/lexical_diversity lesson): the inline form
     # re-evaluated split(text) inside the trigram lambda per element
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.size("tk") - 2),
-            lambda i: F.array_join(F.slice("tk", i, 3), " "),
-        )
-    )
     g = (
         table(spark, sf_dir, "documents")
-        .filter(F.size(toks) >= 3)
         .select("doc_id", toks.alias("tk"))
-        .select("doc_id", F.explode(grams).alias("gram"))
+        .select(
+            "doc_id", F.explode(F.array_distinct(word_ngrams("tk", 3))).alias("gram")
+        )
         .select(
             "doc_id", F.substring(F.md5("gram"), 1, 16).alias("d")
         )
@@ -2185,23 +2170,11 @@ def q_text_dup_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     window partition; the fix at that scale is the simhash family's
     anchor-cap ladder, not a different plan shape.
     """
-    toks = F.split("text", " ")
     sh = (
         table(spark, sf_dir, "documents")
-        .select("doc_id", toks.alias("t"))
-        .filter(F.size("t") >= 5)
+        .select("doc_id", F.split("text", " ").alias("t"))
         .select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(
-                            F.lit(1), F.greatest(F.size("t") - 4, F.lit(1))
-                        ),
-                        lambda i: F.array_join(F.slice("t", i, 5), " "),
-                    )
-                )
-            ).alias("sh"),
+            "doc_id", F.explode(F.array_distinct(word_ngrams("t", 5))).alias("sh")
         )
     )
     c = sh.withColumn("n_docs", F.count("*").over(Window.partitionBy("sh")))

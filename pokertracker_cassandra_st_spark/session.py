@@ -151,21 +151,19 @@ def get_spark(app_name: str = "pokertracker-spark") -> SparkSession:
     may use; ``spark.driver.memory`` is the only memory knob in local mode
     (``SPARK_DRIVER_MEMORY`` overrides the physical-memory share). On a
     real cluster the same app would be submitted with executor settings
-    instead — nothing in the query code depends on local mode.
+    instead — nothing in the query code depends on local mode. The
+    builder sets only static confs; ``tune`` sets every runtime conf,
+    here as on a session we did not create.
     """
-    ncpu = _host_cpus()
-    builder = (
-        SparkSession.builder.master(f"local[{ncpu}]")
+    spark = (
+        SparkSession.builder.master(f"local[{_host_cpus()}]")
         .appName(app_name)
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEMORY") or _driver_memory(),
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", str(max(ncpu, 8)))
+        .getOrCreate()
     )
-    for k, v in _RUNTIME_CONF.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return tune(spark)

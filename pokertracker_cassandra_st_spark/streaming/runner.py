@@ -48,6 +48,7 @@ from pokertracker_cassandra_st_spark.catalog import (
     events_ts_unit,
     normalize_events_ts,
 )
+from pokertracker_cassandra_st_spark.exprs import AUG_OFFSET, near_copies
 
 # Read at call time, so a process may point the stream state elsewhere.
 SCRATCH = catalog.SCRATCH
@@ -225,9 +226,9 @@ def _split_documents(
     per sf/n/mode) — the documents twin of ``_split_events``'s ordered
     mode.
 
-    ``augment=True`` (n_files=4) streams the corpus PLUS a perturbed
-    copy of every >=2-token document (id + 1000000, last token
-    dropped — q_dedup_incremental's shard device, llm/dedup.py):
+    ``augment=True`` (n_files=4) streams the corpus PLUS the near copy
+    of every >=2-token document (``exprs.near_copies``: id +
+    AUG_OFFSET, last token dropped — the dedup tiers' augmented corpus):
     originals arrive in batches 0-1 by doc_id half, their perturbed
     near-duplicates in batches 2-3 — so every later batch carries
     planted near-dups of EARLIER batches and the cross-batch match set
@@ -241,11 +242,8 @@ def _split_documents(
             if n_files != 4:
                 raise ValueError("augmented split is a 4-batch fixture")
             orig = _id_buckets(docs, "doc_id", 2)
-            t = F.split("text", " ")
-            pert = orig.filter(F.size(t) >= 2).select(
-                (F.col("doc_id") + 1000000).alias("doc_id"),
-                F.array_join(F.slice(t, 1, F.size(t) - 1), " ").alias("text"),
-                "lang", "source", "n_chars",
+            pert = near_copies(
+                orig, AUG_OFFSET, "lang", "source", "n_chars",
                 (F.col("_b") + 2).alias("_b"),
             )
             tagged = orig.unionByName(pert)

@@ -38,28 +38,17 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pokertracker_cassandra_st_spark.exprs import word_ngrams
 from pokertracker_cassandra_st_spark.streaming import runner
 
 
 def _shingled(docs: DataFrame) -> DataFrame:
-    """Distinct 5-gram shingles per doc — identical to the full-corpus
-    dedup tiers (llm/dedup.py) so streaming and batch agree on what a
-    near-duplicate is."""
-    t = F.split("text", " ")
-    return (
-        docs.select("doc_id", t.alias("t"))
-        .filter(F.size("t") >= 5)
-        .select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("t") - 4),
-                        lambda i: F.array_join(F.slice("t", i, 5), " "),
-                    )
-                )
-            ).alias("sh"),
-        )
+    """(doc_id, sh): each doc's distinct word-5-grams, built by the same
+    ``exprs.word_ngrams`` as the full-corpus dedup tiers (llm/dedup.py),
+    so streaming and batch agree on what a near-duplicate is. A doc
+    shorter than one shingle has no rows."""
+    return docs.select("doc_id", F.split("text", " ").alias("t")).select(
+        "doc_id", F.explode(F.array_distinct(word_ngrams("t", 5))).alias("sh")
     )
 
 
