@@ -170,6 +170,26 @@ def word_ngrams(tokens: str | Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
+def word_bigrams(tokens: str | Column) -> Column:
+    """The adjacent token pairs of a token array as ``struct(w1, w2)``,
+    in position order with duplicates kept, without the pairs that have
+    an empty token (``"a  b"`` gives none); ``[]`` for fewer than 2
+    tokens and for a NULL array. The size guard sits in the expression
+    for the reason :func:`word_ngrams` gives.
+    """
+    t = F.col(tokens) if isinstance(tokens, str) else tokens
+    return F.when(
+        F.size(t) >= 2,
+        F.filter(
+            F.transform(
+                F.sequence(F.lit(1), F.size(t) - 1),
+                lambda i: F.struct(t[i - 1].alias("w1"), t[i].alias("w2")),
+            ),
+            lambda s: (s["w1"] != "") & (s["w2"] != ""),
+        ),
+    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+
+
 # Near copies of a document start at this id offset (augmented corpus,
 # streamed document split).
 AUG_OFFSET = 1_000_000

@@ -21,6 +21,7 @@ from pokertracker_cassandra_st_spark.exprs import (
     md5_16bit,
     o_davg,
     o_md5_16bit,
+    word_bigrams,
     word_ngrams,
 )
 from pokertracker_cassandra_st_spark.registry import register
@@ -1094,21 +1095,8 @@ def q_text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("cu"))
     )
     v = uni.agg(F.count("*").alias("v"))
-    big = (
-        # the >= 2 guard must precede the sequence: sequence(1, 0) is a
-        # DESCENDING [1, 0] in Spark (the q_ts_holtwinters lesson)
-        toks.filter(F.size("tk") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "filter(transform(sequence(1, size(tk) - 1), "
-                    "i -> struct(tk[i - 1] AS w1, tk[i] AS w2)), "
-                    "s -> s.w1 <> '' AND s.w2 <> '')"
-                )
-            ).alias("bg"),
-        )
-        .select("doc_id", "bg.w1", "bg.w2")
+    big = toks.select("doc_id", F.explode(word_bigrams("tk")).alias("bg")).select(
+        "doc_id", "bg.w1", "bg.w2"
     )
     bcnt = big.groupBy("w1", "w2").agg(F.count("*").alias("cb"))
     nll_q = slong(
@@ -1505,19 +1493,8 @@ def q_text_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.split("text", " ").alias("tk"))
-    big = (
-        toks.filter(F.size("tk") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "filter(transform(sequence(1, size(tk) - 1), "
-                    "i -> struct(tk[i - 1] AS w1, tk[i] AS w2)), "
-                    "s -> s.w1 <> '' AND s.w2 <> '')"
-                )
-            ).alias("bg"),
-        )
-        .select("doc_id", "bg.w1", "bg.w2")
+    big = toks.select("doc_id", F.explode(word_bigrams("tk")).alias("bg")).select(
+        "doc_id", "bg.w1", "bg.w2"
     )
     bcnt = big.groupBy("w1", "w2").agg(F.count("*").alias("cb"))
     ctx = bcnt.groupBy("w1").agg(

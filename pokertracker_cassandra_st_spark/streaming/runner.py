@@ -10,8 +10,9 @@ the source/sink lines change, the transformations are identical.
 This module owns every decision about that fixture and about running a
 stream: the chunk layout (one file per bucket, fed in mtime order,
 ``_SUCCESS`` marker; ``_write_chunks``), the reader (``_read_chunks``),
-run-to-completion (``_run``: throwaway checkpoint, ``availableNow``,
-the one-wave state-partition pin, cleanup) behind ``run_to_table`` and
+run-to-completion (``_run``: throwaway checkpoint written through the
+FileSystem checkpoint manager, ``availableNow``, the one-wave
+state-partition pin, cleanup) behind ``run_to_table`` and
 ``run_foreach_batch``, and the ordered per-user fold on the Python
 stateful API (``fold_by_user``: a key's Arrow chunks sorted as one by
 event_id, the state carried across micro-batches, the final state per
@@ -58,8 +59,10 @@ SCRATCH = catalog.SCRATCH
 # stateful stage of a micro-batch is one wave of tasks. The cost of a
 # state partition is per batch, not per row: each one writes a state
 # delta file and its checksum file (HDFSBackedStateStoreProvider
-# .finalizeDeltaFile), and JVM samples of the replay find most busy task
-# threads waiting in that close. On a 4-slot, 15 GB host, 8 partitions
+# .finalizeDeltaFile), and JVM samples of the replay found most busy task
+# threads waiting in that close; most of that wait was the checkpoint
+# manager forking ``readlink`` and ``chmod`` (see CHECKPOINT_MANAGER),
+# not the write itself. On a 4-slot, 15 GB host, 8 partitions
 # ran the stateful stage in two waves; at 4, the first q_stream_replay
 # of a session (sf0.1, 4 micro-batches) went from 5.99 to 5.26 s (median
 # of 10 alternating runs each) and its median addBatch per micro-batch
@@ -70,6 +73,22 @@ SCRATCH = catalog.SCRATCH
 # query restores state under another count. A deployment holding
 # millions of keys would raise the cap to hundreds.
 STATE_PARTITIONS = 8
+
+# The checkpoint manager of every stream this module runs. Its checkpoint
+# is always a local ``mkdtemp`` directory, and on a local path Spark's
+# default FileContext manager asks Hadoop's RawLocalFs for the link status
+# of every file it renames: the offset, commit, metadata and source logs
+# on the stream thread, and each state delta file and its checksum file
+# inside the state tasks' commit. Without Hadoop's native library that
+# lookup forks a ``readlink`` process (about 14 ms each); one first
+# q_stream_replay at sf0.1 forked 376. The FileSystem manager renames
+# through FileSystem.rename and forks none; the checksum sidecars still
+# wrap it. Checkpoints this module does not create keep Spark's default.
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing"
+    ".FileSystemBasedCheckpointFileManager"
+)
 
 DOCS_RAW_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
@@ -255,20 +274,25 @@ def _split_documents(
 
 def _run(stream_df: DataFrame, sink: Callable[[DataStreamWriter], DataStreamWriter]) -> None:
     """Run ``stream_df`` to completion through ``sink(writeStream)``: a
-    throwaway checkpoint under SCRATCH, an ``availableNow`` trigger, the
-    shuffle partitions pinned to one wave of the session's task slots,
-    at most STATE_PARTITIONS, while the query runs (the query's session
-    clone reads them at start; a foreachBatch function's own jobs run
-    while the pin holds), then everything restored and the checkpoint
-    deleted — a finished query's state is in its sink, and scratch must
-    not grow run after run."""
+    throwaway checkpoint under SCRATCH, an ``availableNow`` trigger, and
+    two session pins while the query runs — the shuffle partitions at
+    one wave of the session's task slots, at most STATE_PARTITIONS, and
+    the FileSystem checkpoint manager (CHECKPOINT_MANAGER), which renames
+    the local checkpoint's files without forking a ``readlink`` per file.
+    The query's session clone reads both at start; a foreachBatch
+    function's own jobs run while they hold. Then both are restored and
+    the checkpoint deleted — a finished query's state is in its sink,
+    and scratch must not grow run after run."""
     spark = stream_df.sparkSession
     os.makedirs(SCRATCH, exist_ok=True)
     ckpt = tempfile.mkdtemp(prefix="ckpt_", dir=SCRATCH)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(min(STATE_PARTITIONS, session._parallelism(spark)))
-    )
+    pins = {
+        "spark.sql.shuffle.partitions": str(min(STATE_PARTITIONS, session._parallelism(spark))),
+        CHECKPOINT_MANAGER_CONF: CHECKPOINT_MANAGER,
+    }
+    prev = {k: spark.conf.get(k, None) for k in pins}
+    for k, v in pins.items():
+        spark.conf.set(k, v)
     try:
         (
             sink(stream_df.writeStream)
@@ -278,7 +302,11 @@ def _run(stream_df: DataFrame, sink: Callable[[DataStreamWriter], DataStreamWrit
             .awaitTermination()
         )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
         shutil.rmtree(ckpt, ignore_errors=True)
 
 

@@ -11,7 +11,8 @@
 4. Every micro-batch fixture is one mtime-ordered chunk file per
    bucket holding exactly its source rows.
 5. Every stream's state partitions are one wave of the session's task
-   slots, at most ``runner.STATE_PARTITIONS``.
+   slots, at most ``runner.STATE_PARTITIONS``, and its checkpoint is
+   written without forking a ``readlink`` process per file.
 """
 
 from __future__ import annotations
@@ -587,3 +588,45 @@ def test_state_partitions_are_one_wave(spark, tmp_path, monkeypatch, slots):
     parts = _state_partitions(spark, run)
     assert list(parts.values()) == [[want, want], [want, want]], parts
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def _process_starts(spark, run, out: str) -> list[str]:
+    """The command line of every OS process the driver JVM starts while
+    ``run()`` runs, recorded as ``jdk.ProcessStart`` events by a JDK
+    Flight Recorder recording in that JVM (local mode: the executors
+    are the same JVM) and dumped to the file ``out``."""
+    jvm = spark.sparkContext._jvm
+    rec = jvm.jdk.jfr.Recording()
+    try:
+        rec.enable("jdk.ProcessStart")
+        rec.start()
+        try:
+            run()
+        finally:
+            rec.stop()
+        path = jvm.java.io.File(out).toPath()
+        rec.dump(path)
+        events = jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(path)
+        return [str(e.getString("command")) for e in events]
+    finally:
+        rec.close()
+
+
+def test_run_loop_checkpoint_forks_no_readlink(spark, tmp_path):
+    # The run loop's checkpoint is a local directory. Spark's default
+    # FileContext checkpoint manager looks up the link status of every
+    # file it renames, and without Hadoop's native library each lookup
+    # forks a `readlink` process; the FileSystem manager the run loop
+    # pins renames without one. The session's own setting comes back
+    # once the streams are done.
+    before = spark.conf.get(runner.CHECKPOINT_MANAGER_CONF, None)
+    src = _key_stream(spark, tmp_path)
+
+    def run():
+        run_to_table(src.groupBy("k").count(), "update")
+        run_foreach_batch(src.dropDuplicates(["k"]), _drain)
+
+    commands = _process_starts(spark, run, str(tmp_path / "procs.jfr"))
+    readlinks = [c for c in commands if c.split(" ", 1)[0].endswith("readlink")]
+    assert readlinks == [], f"{len(readlinks)} of {len(commands)} processes: {readlinks[:3]}"
+    assert spark.conf.get(runner.CHECKPOINT_MANAGER_CONF, None) == before

@@ -1,6 +1,6 @@
 """The scripts beside the engine: ``tools/scale_check.build``, the
-replicated fixture perfbench's x10 workload runs on, and ``bench.py``'s
-one-line report."""
+replicated fixture perfbench's x10 workload runs on, ``bench.py``'s
+one-line report and ``tools/ab.py``'s verdict rule."""
 
 from __future__ import annotations
 
@@ -69,3 +69,30 @@ def test_bench_prints_one_json_line(spark, monkeypatch, capsys):
     assert all(v > 0 for v in rec["queries"].values())
     assert rec["stream_replay_sec"] > 0 and rec["stream_replay_batches"]
     assert rec["sf"] == 0.001
+
+
+def test_ab_verdict_rule():
+    # tools/ab.verdict on pairs shaped like two measured comparisons of
+    # 0c8bfa5 with its parent (10 pairs each): player-crud wall_s won
+    # 10/10, 7.43 -> 7.05 s, inside a parent IQR of 0.57 (no claim);
+    # stream wall_s won 10/10, 5.99 -> 5.26 s, past an IQR of 0.50 (claim)
+    verdict = _load(REPO / "tools" / "ab.py").verdict
+    crud_parent = [6.9, 7.0, 7.15, 7.15, 7.40, 7.46, 7.72, 7.72, 7.9, 8.3]
+    crud = verdict(crud_parent, [p - 0.38 for p in crud_parent], "lower")
+    assert (crud["wins"], crud["claim"]) == (10, False)
+    assert round(crud["parent_median"], 2) == 7.43 and round(crud["change_median"], 2) == 7.05
+    assert round(crud["parent_iqr"], 2) == 0.57
+    parent = [5.5, 5.6, 5.75, 5.75, 5.96, 6.02, 6.25, 6.25, 6.4, 6.9]
+    stream = verdict(parent, [p - 0.73 for p in parent], "lower")
+    assert (stream["wins"], stream["claim"]) == (10, True)
+    assert round(stream["change_median"], 2) == 5.26 and round(stream["parent_iqr"], 2) == 0.50
+    # 8 of 10 wins is no claim however large the gain; a tie wins
+    # nothing; 9 of 10 is a claim
+    change = [p - 2 for p in parent]
+    change[0], change[1] = parent[0] + 1, parent[1]
+    eight = verdict(parent, change, "lower")
+    assert (eight["wins"], eight["claim"]) == (8, False)
+    change[1] = parent[1] - 2
+    assert verdict(parent, change, "lower")["claim"]
+    # "higher is better" turns the direction round
+    assert verdict(parent, change, "higher")["wins"] == 1
